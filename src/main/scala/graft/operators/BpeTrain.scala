@@ -107,7 +107,8 @@ object BpeTrain {
         // accounting), so the LOGICAL plan grows exponentially without
         // lineage truncation — Catalyst optimization time explodes even
         // though the data is tiny (measured 61 s at R=4 with cache, ~6 s
-        // with checkpoint). Same pattern as Dedup.dedupClusters' rounds.
+        // with checkpoint). Same pattern as the rounds of
+        // Dedup.pointerJumpLabels, the connected-components loop.
         .localCheckpoint()
       val nAfter = merged.agg(sum("freq").as("n_symbols_after"))
       val stat = best.crossJoin(nAfter)

@@ -193,9 +193,11 @@ object Dedup {
     * 4.7× slower), the prefix bound is per-document, exact at any corpus
     * size, and needs no global threshold statistic. */
   def dedupNgramJaccard(s: SparkSession, d: String): DataFrame =
-    ngramJaccardPairs(shingleRelation(s, d))
+    ngramJaccardPairs(shingleRelation(s, d)).orderBy("doc_a", "doc_b")
 
-  /** Core of `dedup_ngram_jaccard` over any shingle relation.
+  /** Core of `dedup_ngram_jaccard` over any shingle relation, UNSORTED:
+    * the clustering callers ignore pair order, and a sort here would put a
+    * range exchange plus its sampling job into their cached edge plan.
     * `fixedDfThreshold` pins the legacy absolute `df ≤ t` cap (spec use only
     * — DedupSpec shows the absolute rule losing pairs prefix filtering is
     * guaranteed to keep). */
@@ -218,20 +220,25 @@ object Dedup {
     //  - length filter in the join condition: J ≥ 0.5 forces min/max set
     //    size ≥ ~0.5, so wildly different sizes can't pair;
     //  - positional filter: ONE aggregation both dedups the pair and finds
-    //    its globally-first shared blocking shingle; both docs rank by the
-    //    SAME total order, so no shared element precedes that match in
-    //    either doc, and overlap ≤ 1 + min(na−rka, nb−rkb) — prune when the
-    //    bound can't reach the required overlap (na+nb)/3 (with a −1 slack
-    //    for the round(·,4) boundary). On the saturated-vocabulary testdata
-    //    this cuts candidates 3× (430k → 146k at sf0.1).
+    //    the ranks of its globally-first shared blocking shingle; both docs
+    //    rank by the SAME total order (df, shingle), so no shared element
+    //    precedes that match in either doc, and overlap ≤ 1 + min(na−rka,
+    //    nb−rkb) — prune when the bound can't reach the required overlap
+    //    (na+nb)/3 (with a −1 slack for the round(·,4) boundary). On the
+    //    saturated-vocabulary testdata this cuts candidates 3× (430k → 146k
+    //    at sf0.1).
+    //    The ranks are two plain integer min()s, exact: a doc's rank is
+    //    monotone in the shared total order, so the shared shingle that
+    //    comes first in that order has BOTH the minimum rka and the minimum
+    //    rkb. (A min over a struct carries a non-mutable aggregation buffer
+    //    and plans as a SortAggregate with a full sort.)
     val cand = blocked.as("a").join(blocked.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id") &&
           col("a.n_sh") <= col("b.n_sh") * 2 + 1 && col("b.n_sh") <= col("a.n_sh") * 2 + 1)
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.n_sh").as("na"), col("b.n_sh").as("nb"))
-      .agg(min(struct(col("a.df"), col("a.shingle"),
-        col("a.rk").as("rka"), col("b.rk").as("rkb"))).as("m"))
-      .filter(least(col("na") - col("m.rka"), col("nb") - col("m.rkb")) + 1 >=
+      .agg(min(col("a.rk")).as("rka"), min(col("b.rk")).as("rkb"))
+      .filter(least(col("na") - col("rka"), col("nb") - col("rkb")) + 1 >=
         floor((col("na") + col("nb")) / 3) - 1)
       .select("doc_a", "doc_b", "na", "nb")
     // Exact verification on candidates via per-doc shingle-set ARRAYS and
@@ -250,7 +257,6 @@ object Dedup {
           (col("na") + col("nb") - col("n_common")).cast("double"), 4)
           .as("jaccard"))
       .filter(col("jaccard") >= 0.5)
-      .orderBy("doc_a", "doc_b")
   }
 
   /** Cross-document boilerplate detection — C4's "remove lines occurring
@@ -536,18 +542,19 @@ object Dedup {
   }
 
   /** Within-cell pair generation + exact-cosine verify over any assigned
-    * (vec_id, cid, v, nrm) relation. */
+    * (vec_id, cid, v, nrm) relation, UNSORTED (the clustering callers
+    * ignore pair order; `dedupEmbedding` sorts at the query boundary). */
   private def embeddingPairsOn(assigned: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions.vecDot
     val pairs = assigned.as("a").join(assigned.as("b"),
         col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         round(vecDot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")), 4).as("cosine"))
-    pairs.filter(col("cosine") >= 0.35).orderBy("vec_a", "vec_b")
+    pairs.filter(col("cosine") >= 0.35)
   }
 
   def dedupEmbedding(s: SparkSession, d: String): DataFrame =
-    embeddingPairsOn(embAssigned(s, d))
+    embeddingPairsOn(embAssigned(s, d)).orderBy("vec_a", "vec_b")
 
   // Embedding near-dup pairs as a reusable CTE chain: consumed standalone
   // (dedup_embedding) and under the recursive closure (dedup_semantic_clusters)
@@ -588,70 +595,156 @@ object Dedup {
 
   /** Duplicate-cluster formation: connected components over the near-dup
     * pair graph — the step AFTER pair finding in a real dedup pipeline
-    * (keep min-id per cluster, drop the rest). Min-label propagation with a
-    * POINTER-JUMPING step each round (lbl ← lbl(lbl)), so chains collapse
-    * doubling-fast: O(log diameter) rounds, genuinely — one-hop propagation
-    * alone would need O(diameter). ONE driver action per round (a one-row
-    * sum that doubles as the convergence signal: labels only ever decrease,
-    * so an unchanged sum is a fixpoint). If the cap is ever hit without
-    * convergence the query FAILS rather than silently emitting partial
-    * clusters. Oracle: DuckDB recursive CTE transitive closure. */
+    * (keep min-id per cluster, drop the rest). The components come from
+    * `clusterPairs` (driver union-find under the edge gate, a Spark
+    * pointer-jumping loop past it), fed by the UNSORTED pair core: CC
+    * ignores pair order. Oracle: DuckDB recursive CTE transitive closure. */
   def dedupClusters(s: SparkSession, d: String): DataFrame =
-    clusterPairs(dedupNgramJaccard(s, d).select("doc_a", "doc_b"))
+    clusterPairs(ngramJaccardPairs(shingleRelation(s, d)).select("doc_a", "doc_b"))
 
-  /** CC core over an arbitrary (doc_a, doc_b) pair relation.
+  /** Connected components over an arbitrary (doc_a, doc_b) pair relation:
+    * one (doc_id, cluster, is_keeper) row per endpoint, `cluster` = the
+    * component's minimum doc_id, ordered by doc_id.
     *
-    * `broadcastEdgeLimit` size-gates the per-round edge-list broadcast: a
-    * near-dup edge list is usually tiny, but a high-duplication crawl at
-    * 100 TB can blow past the broadcast ceiling and an explicit
-    * `broadcast()` hint that doesn't fit kills the job (AQE cannot demote a
-    * hint). Past the gate we fall back to a plain shuffle join on `src` —
-    * same semantics, one extra exchange per round. The gate costs nothing:
-    * `edges` is cached and the count pre-materializes the cache the first
-    * round needs anyway. */
+    * The pair relation is cached and counted ONCE, and the count picks the
+    * algorithm (the count is not a redundant scan: it materializes the
+    * cache both paths read, and the gate needs the REAL edge count, which
+    * derives from the pair finder's filter — no staged metadata can
+    * predict it):
+    *  - ≤ `broadcastEdgeLimit` edges (two per pair): the cached pairs are
+    *    collected once and solved on the driver (`componentLabels`).
+    *    Driver memory is primitive arrays only, each ~4–8 bytes per edge
+    *    (the pair longs, a sorted endpoint copy, an int parent array, the
+    *    (doc, cluster) output): ~24–32 bytes per edge at the peak — less
+    *    than broadcasting the same edge list, which builds rows and a
+    *    hashed relation on the driver.
+    *  - past the gate: `pointerJumpLabels`, a Spark loop of shuffle joins
+    *    that never brings the graph to the driver. */
   private[graft] def clusterPairs(
       pairs: DataFrame,
       broadcastEdgeLimit: Long = 5000000L): DataFrame = {
-    // both edge directions in ONE pass over the pair pipeline (a union of
-    // two selects would evaluate the whole upstream Jaccard plan twice)
+    val cached = pairs
+      .select(col("doc_a").cast("long").as("doc_a"), col("doc_b").cast("long").as("doc_b"))
+      .cache()
+    val nEdges = 2 * cached.count()
+    // Size the LABEL STATE's partitions (the loop's rounds, the driver
+    // path's output) by its own volume, not the session default (guide
+    // §2.2: size partitions to bytes). The label relation holds one
+    // (doc, lbl) row per distinct endpoint — ≤ 2·|pairs| rows of two
+    // longs — while spark.sql.shuffle.partitions is sized for data-grain
+    // shuffles. Inheriting it made every loop round pay
+    // partitions× per-task/stage overhead on kilobytes of state AND scale
+    // the per-round cost with the core count (the r16 13.1 s @32-core vs
+    // 6.2 s @8-core anti-scaling row). AQE can't fix it: cached-plan
+    // shuffles keep their static width
+    // (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false).
+    // ~1M label rows (~dozens of MB) per partition, capped at the session
+    // parallelism — grows with real edge volume, so a 100 TB pair graph
+    // still fans out.
+    val stateParts = math.max(1L, math.min(
+      pairs.sparkSession.sparkContext.defaultParallelism.toLong,
+      nEdges / 1000000L)).toInt
+    val labels =
+      if (nEdges <= broadcastEdgeLimit) driverLabels(cached, stateParts)
+      else pointerJumpLabels(cached, stateParts)
+    labels.select(col("doc").as("doc_id"), col("lbl").as("cluster"))
+      .withColumn("is_keeper", col("doc_id") === col("cluster"))
+      .orderBy("doc_id")
+  }
+
+  /** Connected components on the driver: ONE job collects the cached
+    * (long) pairs as a primitive array per partition, `componentLabels`
+    * solves them, and the labels come back as `parts` contiguous (doc, lbl)
+    * slices, each shipped with its own task. Returns (doc, lbl). */
+  private def driverLabels(pairs: DataFrame, parts: Int): DataFrame = {
+    val s = pairs.sparkSession
+    val ends = pairs.queryExecution.toRdd.mapPartitions { rows =>
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      rows.foreach { r =>
+        if (r.isNullAt(0) || r.isNullAt(1))
+          throw new IllegalArgumentException("clusterPairs: null pair endpoint")
+        b += r.getLong(0); b += r.getLong(1)
+      }
+      Iterator.single(b.result())
+    }.collect().flatten
+    pairs.unpersist()
+    val (ids, lbl) = componentLabels(ends)
+    val bounds = (0 to parts).map(p => (ids.length.toLong * p / parts).toInt)
+    val slices = (0 until parts).map(p =>
+      (ids.slice(bounds(p), bounds(p + 1)), lbl.slice(bounds(p), bounds(p + 1))))
+    s.createDataFrame(
+      s.sparkContext.parallelize(slices, parts).flatMap { case (d, l) =>
+        d.indices.iterator.map(i => org.apache.spark.sql.Row(d(i), l(i)))
+      },
+      new org.apache.spark.sql.types.StructType()
+        .add("doc", "long", nullable = false).add("lbl", "long", nullable = false))
+  }
+
+  /** Union-find over interleaved endpoint pairs (a0, b0, a1, b1, …):
+    * returns the sorted distinct endpoints and, per endpoint, its
+    * component's minimum id. Endpoints map to dense indexes by binary
+    * search in the sorted array, so index order IS id order and "union by
+    * minimum id" is union by minimum index: every parent index is ≤ its
+    * child's, each root is its component's minimum, and path halving
+    * keeps that invariant. */
+  private def componentLabels(ends: Array[Long]): (Array[Long], Array[Long]) = {
+    val sorted = ends.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0
+    var k = 0
+    while (k < sorted.length) {
+      if (n == 0 || sorted(k) != sorted(n - 1)) { sorted(n) = sorted(k); n += 1 }
+      k += 1
+    }
+    val ids = java.util.Arrays.copyOf(sorted, n)
+    val parent = new Array[Int](n)
+    var i = 0
+    while (i < n) { parent(i) = i; i += 1 }
+    def find(x: Int): Int = {
+      var j = x
+      while (parent(j) != j) { parent(j) = parent(parent(j)); j = parent(j) }
+      j
+    }
+    k = 0
+    while (k < ends.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, ends(k)))
+      val rb = find(java.util.Arrays.binarySearch(ids, ends(k + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      k += 2
+    }
+    // parent(i) ≤ i, so an ascending pass resolves each parent's root
+    // before its children: one step per index compresses every path
+    val lbl = new Array[Long](n)
+    i = 0
+    while (i < n) { parent(i) = parent(parent(i)); lbl(i) = ids(parent(i)); i += 1 }
+    (ids, lbl)
+  }
+
+  /** Pointer-jumping connected components as a Spark loop — the path past
+    * the driver gate, where the graph must never be collected. Min-label
+    * propagation with a POINTER-JUMPING step each round (lbl ← lbl(lbl)),
+    * so chains collapse doubling-fast: O(log diameter) rounds, genuinely —
+    * one-hop propagation alone would need O(diameter). One driver action
+    * per round (a one-row sum that doubles as the convergence signal:
+    * labels only ever decrease, so an unchanged sum is a fixpoint). If the
+    * cap is ever hit without convergence the query FAILS rather than
+    * silently emitting partial clusters. Returns (doc, lbl). */
+  private def pointerJumpLabels(pairs: DataFrame, loopParts: Int): DataFrame = {
+    // both edge directions in ONE pass over the cached pairs
     val edges = pairs
       .select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select("e.src", "e.dst")
       .cache()
-    // NOT a redundant scan: this count IS the materialization of the
-    // cached edge relation that CC round 1 would otherwise pay, and the
-    // gate needs the REAL size (edges derive from the pair finder's
-    // Jaccard filter — no staged metadata can predict it). Replacing it
-    // with an unhinted join + AQE runtime selection would leave round 1
-    // planned against a pre-materialization estimate.
-    val nEdges = edges.count()
-    val small = nEdges <= broadcastEdgeLimit
-    val edgesJoin = if (small) broadcast(edges) else edges
-    // Partition the LOOP STATE by its own volume, not the session default
-    // (guide §2.2: size partitions to bytes). The label relation holds one
-    // (doc, lbl) row per distinct endpoint — ≤ 2·|edges| rows of two longs —
-    // while spark.sql.shuffle.partitions is sized for data-grain shuffles.
-    // Inheriting it made every round pay partitions× per-task/stage overhead
-    // on kilobytes of state AND scale the per-round cost with the core count
-    // (the r16 13.1 s @32-core vs 6.2 s @8-core anti-scaling row). AQE can't
-    // fix it: cached-plan shuffles keep their static width
-    // (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false).
-    // ~1M label rows (~dozens of MB) per partition, capped at the session
-    // parallelism — grows with real edge volume, so a 100 TB pair graph
-    // still fans out.
-    val loopParts = math.max(1L, math.min(
-      pairs.sparkSession.sparkContext.defaultParallelism.toLong,
-      nEdges / 1000000L)).toInt
     var labels = edges.select(col("src").as("doc"))
       .repartition(loopParts, col("doc")).distinct()
       .withColumn("lbl", col("doc"))
       .cache()
     def labelSum(df: DataFrame): Long =
       df.agg(coalesce(sum("lbl"), lit(0L))).head().getLong(0)
-    var prevSum = labelSum(labels) // coalesce: an empty pair set must yield
-    var converged = prevSum == 0L  // an empty cluster table, not an NPE
+    var prevSum = labelSum(labels)
+    var converged = false
     var iters = 0
     val maxIters = 20
     while (!converged && iters < maxIters) {
@@ -659,7 +752,7 @@ object Dedup {
       // The explicit repartition pins the aggregate's one exchange at the
       // state-sized width (groupBy reuses the hash(doc) partitioning).
       val prop = labels
-        .join(edgesJoin, col("doc") === col("src"))
+        .join(edges, col("doc") === col("src"))
         .select(col("dst").as("doc"), col("lbl"))
         .unionAll(labels)
         .repartition(loopParts, col("doc"))
@@ -674,14 +767,8 @@ object Dedup {
       // the planner's stack after ~8 rounds. Checkpointing resets the plan to
       // a leaf each round. (A fault-tolerant cluster run would use
       // checkpoint() with a reliable dir; local[...] has no such dir.)
-      // Broadcast the jump side under the SAME size gate as the edges: the
-      // label relation is endpoint-grain (≤ 2·|edges| rows, strictly smaller
-      // than the edge list already being broadcast), so past the gate both
-      // fall back to shuffle joins together. Removes the self-join's two
-      // hash(lbl)/hash(doc) exchanges per round (guide §3.1).
-      val jumpSide = if (small) broadcast(prop) else prop
       val jumped = prop.as("p")
-        .join(jumpSide.as("q"), col("p.lbl") === col("q.doc"), "left")
+        .join(prop.as("q"), col("p.lbl") === col("q.doc"), "left")
         .select(col("p.doc").as("doc"),
           coalesce(least(col("p.lbl"), col("q.lbl")), col("p.lbl")).as("lbl"))
         .localCheckpoint()
@@ -696,9 +783,9 @@ object Dedup {
       throw new IllegalStateException(
         s"dedup_clusters: not converged after $maxIters pointer-jumping rounds " +
           "(component diameter > 2^20?) — refusing to emit partial clusters")
-    labels.select(col("doc").as("doc_id"), col("lbl").as("cluster"))
-      .withColumn("is_keeper", col("doc_id") === col("cluster"))
-      .orderBy("doc_id")
+    // the labels are checkpointed: neither input cache is read again
+    edges.unpersist(); pairs.unpersist()
+    labels
   }
 
   private val dedupClustersSql =
@@ -791,7 +878,7 @@ object Dedup {
     * two already-scale-proven operators; the oracle composes the embedding
     * pair CTEs under DuckDB's recursive closure. */
   def dedupSemanticClusters(s: SparkSession, d: String): DataFrame =
-    clusterPairs(dedupEmbedding(s, d)
+    clusterPairs(embeddingPairsOn(embAssigned(s, d))
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       .withColumnRenamed("doc_id", "vec_id")
 

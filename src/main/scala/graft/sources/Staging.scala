@@ -19,8 +19,23 @@ object Staging {
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(datasetDir.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(12)
-    System.getProperty("java.io.tmpdir") + s"/graft_${tag}_${key}_$jvmToken"
+    val path = System.getProperty("java.io.tmpdir") + s"/graft_${tag}_${key}_$jvmToken"
+    handedOut.add(path)
+    path
   }
+
+  // Every directory `dir` hands out is removed when the JVM exits: the
+  // token makes each path this JVM's own, so no other run's tree is hit.
+  private val handedOut = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  sys.addShutdownHook(deleteTrees(handedOutDirs))
+
+  /** The directories `dir` has handed out in this JVM so far. */
+  private[graft] def handedOutDirs: Set[String] =
+    handedOut.toArray(Array.empty[String]).toSet
+
+  /** Recursive delete of each tree, best effort: a missing tree is a no-op. */
+  private[graft] def deleteTrees(dirs: Iterable[String]): Unit =
+    dirs.foreach(d => deleteRecursively(new java.io.File(d)))
 
   // ---------------------------------------------------------------------
   // Managed-table staging (the BucketedLayout pattern): a production
@@ -375,7 +390,8 @@ object Staging {
   /** Recursive delete — staging trees nest (`_temporary/<query>/...`), a
     * one-level sweep leaves deep litter behind. */
   def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) {
+    // a symbolic link is removed itself, never followed into its target
+    if (java.nio.file.Files.isDirectory(f.toPath, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
       val children = f.listFiles()
       if (children != null) children.foreach(deleteRecursively)
     }

@@ -109,6 +109,13 @@ class DedupSpec extends SparkSpec {
     assert(prefix.forall(_.getAs[Double]("jaccard") == 1.0))
   }
 
+  test("ngram jaccard: the candidate aggregate plans without a SortAggregate") {
+    val pairs = dedupNgramJaccard(spark, sf)
+    assert(pairs.collect().nonEmpty)
+    val plan = pairs.queryExecution.executedPlan.toString
+    assert(!plan.contains("SortAggregate"), s"struct-buffer aggregate is back:\n$plan")
+  }
+
   test("simhash pairs all have hamming <= 3 and include near-identical docs") {
     val rows = dedupSimhash(spark, sf).collect()
     assert(rows.forall(_.getAs[Long]("hamming") <= 3))
@@ -149,27 +156,80 @@ class DedupSpec extends SparkSpec {
     assert(operators.Dedup.clusterPairs(empty).collect().isEmpty)
   }
 
-  test("clusterPairs: shuffle-join fallback (limit=0) matches the broadcast path") {
+  test("clusterPairs: shuffle-join loop (limit=0) matches the driver union-find path") {
     import SparkSpec.spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L))
       .toDF("doc_a", "doc_b")
     def asMap(limit: Long) = operators.Dedup.clusterPairs(pairs, limit).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster")).toMap
-    val viaBroadcast = asMap(5000000L)
-    val viaShuffle = asMap(0L) // forces the size-gate fallback
-    assert(viaShuffle == viaBroadcast)
-    assert(viaBroadcast == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
+    val viaDriver = asMap(5000000L)
+    val viaLoop = asMap(0L) // forces the over-the-gate loop
+    assert(viaLoop == viaDriver)
+    assert(viaDriver == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
       11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
   }
 
   test("clusterPairs: pointer jumping converges on a 200-hop chain") {
     import SparkSpec.spark.implicits._
-    // one-hop min-label propagation would need ~200 rounds and trip the cap;
-    // pointer jumping must converge in O(log d) and still match the closure
+    // at limit 0 the loop runs: one-hop min-label propagation would need
+    // ~200 rounds and trip the cap (a loud failure); pointer jumping must
+    // converge in O(log d). The driver path must give the same closure.
     val chain = (0L until 200L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val labels = operators.Dedup.clusterPairs(chain).collect()
-    assert(labels.length == 201)
-    assert(labels.forall(_.getAs[Long]("cluster") == 0L))
+    Seq(0L, 5000000L).foreach { limit =>
+      val labels = operators.Dedup.clusterPairs(chain, limit).collect()
+      assert(labels.length == 201, s"limit $limit")
+      assert(labels.forall(_.getAs[Long]("cluster") == 0L), s"limit $limit")
+    }
+  }
+
+  test("clusterPairs: driver path, loop path and a BFS closure agree on generated graphs") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import SparkSpec.spark.implicits._
+    // a graph is a list of pieces (possibly none); each piece is a star, a
+    // chain, a repeated pair or a self-loop over its own random ids, with
+    // random edge directions — pieces may share ids and so merge
+    val piece: Gen[Seq[(Long, Long)]] = for {
+      kind <- Gen.choose(0, 3)
+      k <- Gen.choose(1, 60)
+      ids <- Gen.listOfN(k + 1, Gen.choose(0L, 100000L))
+      flips <- Gen.listOfN(k, Gen.oneOf(true, false))
+    } yield {
+      val local = kind match {
+        case 0 => (1 to k).map(i => (0, i))
+        case 1 => (0 until k).map(i => (i, i + 1))
+        case 2 => Seq.fill(k)((0, 1))
+        case _ => Seq((0, 0))
+      }
+      local.zip(flips).map { case ((a, b), f) =>
+        if (f) (ids(b), ids(a)) else (ids(a), ids(b)) }
+    }
+    val graph = Gen.frequency(1 -> Gen.const(Seq.empty[(Long, Long)]),
+      6 -> Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, piece).map(_.flatten)))
+    def closure(pairs: Seq[(Long, Long)]): Seq[(Long, Long, Boolean)] = {
+      val adj = (pairs ++ pairs.map(_.swap)).groupMap(_._1)(_._2)
+      val cluster = scala.collection.mutable.Map.empty[Long, Long]
+      adj.keys.foreach { start =>
+        if (!cluster.contains(start)) {
+          val seen = scala.collection.mutable.Set(start)
+          var frontier = List(start)
+          while (frontier.nonEmpty) {
+            frontier = frontier.flatMap(adj).filter(seen.add)
+          }
+          seen.foreach(cluster(_) = seen.min)
+        }
+      }
+      cluster.toSeq.sorted.map { case (d, c) => (d, c, d == c) }
+    }
+    val prop = Prop.forAllNoShrink(graph) { pairs =>
+      val df = pairs.toDF("doc_a", "doc_b")
+      def labels(limit: Long) = operators.Dedup.clusterPairs(df, limit).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
+      val expected = closure(pairs)
+      labels(5000000L) == expected && labels(0L) == expected
+    }
+    val result = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(10).withWorkers(1).withInitialSeed(20261019L), prop)
+    assert(result.passed, result.status.toString)
   }
 
   test("embedding near-dup pairs are same-cell with cosine >= threshold") {

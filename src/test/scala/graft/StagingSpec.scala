@@ -32,6 +32,27 @@ class StagingSpec extends SparkSpec {
     }
   }
 
+  test("dir records every tree it hands out; deleteTrees removes trees, never link targets") {
+    import java.nio.file.Files
+    val t = Files.createTempDirectory("graft_stage_rm").toFile
+    val outside = Files.createTempDirectory("graft_stage_keep").toFile
+    try {
+      val handed = Staging.dir("cleanup_probe", t.getPath)
+      assert(Staging.handedOutDirs.contains(handed))
+      val tree = new java.io.File(t, "tree")
+      new java.io.File(tree, "a/b").mkdirs()
+      Files.write(new java.io.File(tree, "a/b/part-0").toPath, Array[Byte](1, 2, 3))
+      val kept = new java.io.File(outside, "keep.txt")
+      Files.write(kept.toPath, Array[Byte](4))
+      Files.createSymbolicLink(new java.io.File(tree, "a/link").toPath, outside.toPath)
+      Staging.deleteTrees(Seq(tree.getPath, new java.io.File(t, "never_made").getPath))
+      assert(!tree.exists(), "staged tree survived the cleanup")
+      assert(kept.exists(), "cleanup followed a symbolic link out of the tree")
+    } finally {
+      Staging.deleteRecursively(t); Staging.deleteRecursively(outside)
+    }
+  }
+
   test("regenerating the witness changes the stamp (stale layouts impossible)") {
     val t = java.nio.file.Files.createTempDirectory("graft_stage_c").toFile
     try {
