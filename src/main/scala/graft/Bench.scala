@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+
+import scala.collection.mutable
 
 /** Driver benchmark: one JSON line of per-query seconds at the SF dir given
   * by SPARK_GRAFT_SF_DIR. An untimed PRE-STAGE sweep over the full suite at
@@ -14,11 +17,117 @@ import org.apache.spark.sql.SparkSession
   * MEDIAN; the per-query min..max spread is kept in the JSON under "spread".
   * The machine is shared and single runs swing 2-3x under load — a median of
   * three is what the regression gate needs to mean anything (BASELINE.md).
+  *
+  * Where the time went: bench_full.json's "layers" holds one record per
+  * query, taken from its median run. It splits the run at the return of
+  * the builder call into build seconds (the eager jobs of iterative and
+  * streaming queries run there) and execute seconds, and gives the run's
+  * jobs (and how many ran during build), stages, tasks, executor CPU,
+  * shuffle read/write, spill and input bytes, and its five heaviest stages
+  * by executor time. SPARK_GRAFT_BENCH_ONLY narrows the suite to the
+  * queries under study.
   */
 object Bench {
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     s(s.size / 2) // odd run counts: the true median; even: upper median
+  }
+
+  /** JSON string literal. Escapes backslash, quote and ALL control chars
+    * (<0x20): a tab or CR in builder-authored SQL would otherwise make the
+    * oracle checker's json.load fail and silently zero the correctness run. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** Gate baselines: the rows of BASELINE.md's tables headed
+    * `| query | median sec | spread |` and of no other table. Other tables
+    * there (state-store backends, scaling exponents) also pair a query
+    * name with a number, and reading them silently replaced four streaming
+    * baselines. A name with two baseline rows is an error, not an
+    * overwrite. */
+  private[graft] def parseBaseline(lines: Iterator[String]): Map[String, Double] = {
+    val out = mutable.Map[String, Double]()
+    var inTable = false
+    lines.map(_.trim).foreach { line =>
+      if (!line.startsWith("|")) inTable = false
+      else {
+        val cells = line.stripPrefix("|").stripSuffix("|").split("\\|").map(_.trim).toSeq
+        if (cells.take(3) == Seq("query", "median sec", "spread")) inTable = true
+        else if (inTable && !cells.head.forall("-: ".contains(_))) {
+          require(!out.contains(cells.head), s"BASELINE.md: two baseline rows for ${cells.head}")
+          out(cells.head) = cells(1).toDouble
+        }
+      }
+    }
+    out.toMap
+  }
+
+  /** Local properties naming the query run and the phase (build/execute)
+    * of every job. Unlike the job group, which a streaming query's
+    * micro-batch thread replaces with its own run id, local properties
+    * pass unchanged to the threads a query starts. */
+  private[graft] val RunProp = "graft.bench.run"
+  private[graft] val PhaseProp = "graft.bench.phase"
+
+  /** Spark work per query run, keyed by the job's `RunProp`. Task and
+    * stage events reach the listener bus after the action that caused
+    * them may have returned, so nothing is filtered by time: read the
+    * listener only once the bus is drained (spark.stop() drains it). */
+  private[graft] final class LayerListener extends SparkListener {
+    final class Stage { var name = ""; var tasks = 0; var execMs = 0L }
+    final class Run {
+      var jobs, buildJobs, stages, tasks = 0
+      var cpuNs, shuffleRead, shuffleWrite, spill, input = 0L
+      val stageById = mutable.Map[Int, Stage]()
+    }
+    val runs = mutable.Map[String, Run]()
+    private val runOfStage = mutable.Map[Int, Run]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(RunProp))).foreach { key =>
+        val r = runs.getOrElseUpdate(key, new Run)
+        r.jobs += 1
+        if (e.properties.getProperty(PhaseProp) == "build") r.buildJobs += 1
+        e.stageIds.foreach(runOfStage(_) = r)
+      }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      runOfStage.get(e.stageId).foreach { r =>
+        val st = r.stageById.getOrElseUpdate(e.stageId, new Stage)
+        r.tasks += 1; st.tasks += 1
+        val m = e.taskMetrics
+        if (m != null) {
+          st.execMs += m.executorRunTime
+          r.cpuNs += m.executorCpuTime
+          r.shuffleRead += m.shuffleReadMetrics.totalBytesRead
+          r.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+          r.spill += m.diskBytesSpilled
+          r.input += m.inputMetrics.bytesRead
+        }
+      }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      runOfStage.get(e.stageInfo.stageId).foreach { r =>
+        r.stages += 1
+        r.stageById.getOrElseUpdate(e.stageInfo.stageId, new Stage).name =
+          e.stageInfo.name.takeWhile(_ != '\n')
+      }
+  }
+
+  private def r3(v: Double) = math.round(v * 1000) / 1000.0
+
+  private def layerJson(run: Int, buildSec: Double, executeSec: Double,
+      r: LayerListener#Run): String = {
+    val top = r.stageById.toSeq.sortBy { case (id, st) => (-st.execMs, id) }.take(5)
+      .map { case (id, st) =>
+        s"""{"stage":$id,"name":${jsonString(st.name)},"tasks":${st.tasks},"executor_ms":${st.execMs}}"""
+      }.mkString("[", ",", "]")
+    s"""{"run":$run,"build_sec":${r3(buildSec)},"execute_sec":${r3(executeSec)},"jobs":${r.jobs},"build_jobs":${r.buildJobs},"stages":${r.stages},"tasks":${r.tasks},"executor_cpu_sec":${r3(r.cpuNs / 1e9)},"shuffle_read_bytes":${r.shuffleRead},"shuffle_write_bytes":${r.shuffleWrite},"spill_bytes":${r.spill},"input_bytes":${r.input},"top_stages":$top}"""
   }
 
   /** Machine-load CONTROL: a fixed CPU-bound Spark job (hash-reduce over a
@@ -46,30 +155,36 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     // dev-iteration filter (comma-separated names); the driver never sets it
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val bench: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
       SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Plan-fingerprint stability: plan toString truncates metadata
-      // fields (DataFilters/PushedFilters/Location) at 100 chars, and the
-      // CUT POINT shifts with expression-id WIDTH (#74 vs #5041) — so a
-      // fingerprint captured early in a session differed from the same
-      // plan captured after ~300 queries advanced the id counter (the r16
-      // slim-prestage 26-change mystery: every diffed plan was
-      // structurally identical text up to ids). A large limit makes the
-      // metadata print whole, so normalization sees complete tokens no
-      // matter when in the session the capture happens.
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // gate baselines are read first: a malformed BASELINE.md fails the
+    // bench before any timing, not after it
+    val baseline: Map[String, Double] = {
+      val f = new java.io.File("BASELINE.md")
+      if (!f.isFile) Map.empty
+      else {
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try parseBaseline(src.getLines()) finally src.close()
+      }
+    }
+    val spark = GraftSession.harness()
+    // Plan-fingerprint stability: plan toString truncates metadata
+    // fields (DataFilters/PushedFilters/Location) at 100 chars, and the
+    // CUT POINT shifts with expression-id WIDTH (#74 vs #5041) — so a
+    // fingerprint captured early in a session differed from the same
+    // plan captured after ~300 queries advanced the id counter (the r16
+    // slim-prestage 26-change mystery: every diffed plan was
+    // structurally identical text up to ids). A large limit makes the
+    // metadata print whole, so normalization sees complete tokens no
+    // matter when in the session the capture happens.
+    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
+    val sc = spark.sparkContext
+    val layers = new LayerListener
+    sc.addSparkListener(layers)
     // Silence ONLY the window package's "No Partition Defined" WARN: every
     // surviving unpartitioned window in the suite is a provably bounded
     // metadata-grid window (PlanSpec's guard rejects any data-grain
@@ -130,11 +245,17 @@ object Bench {
     val fingerprints = scala.collection.mutable.Map[String, String]()
     // load control bracketing the suite: see calibrate's doc
     val calibBefore = calibrate(spark, nRuns)
+    // (build sec, execute sec) per (query, run), for the layers record
+    val split = mutable.Map[(String, Int), (Double, Double)]()
     val runs: Seq[Map[String, Double]] = (1 to nRuns).map { runIdx =>
       bench.map { case (name, fn) =>
+        sc.setLocalProperty(RunProp, s"$name#$runIdx")
+        sc.setLocalProperty(PhaseProp, "build")
         val t0 = System.nanoTime()
         val ok = try {
             val df = fn(spark, sfDir)
+            val tBuilt = System.nanoTime()
+            sc.setLocalProperty(PhaseProp, "execute")
             if (runIdx == 1) {
               fingerprints(name) = PlanFingerprint.fingerprint(df)
               // diagnosis aid: dump the RAW sparkPlan text per query so a
@@ -147,10 +268,14 @@ object Bench {
                 finally w.close()
               }
             }
-            df.count(); true
+            df.count()
+            split((name, runIdx)) = ((tBuilt - t0) / 1e9, (System.nanoTime() - tBuilt) / 1e9)
+            true
           }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
+        sc.setLocalProperty(RunProp, null)
+        sc.setLocalProperty(PhaseProp, null)
         spark.catalog.clearCache() // per-query scratch caches must not skew later queries
         // a failed query reports -1, never a plausible-looking partial time
         name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
@@ -213,30 +338,10 @@ object Bench {
       s""""prestage_failures":${fpJson(prestageFailures.toSeq)},"prestage_misses":${fpJson(prestageMisses)}"""
     val calibAfter = calibrate(spark, nRuns)
     val calib =
-      s""""calib_before_sec":${math.round(calibBefore * 1000) / 1000.0},"calib_after_sec":${math.round(calibAfter * 1000) / 1000.0}"""
+      s""""calib_before_sec":${r3(calibBefore)},"calib_after_sec":${r3(calibAfter)}"""
     val stagingJson = stagingCosts.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + math.round(v * 1000) / 1000.0 }
+      .map { case (k, v) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"runs":$nRuns,$calib,"prestage_sec":${math.round(prestageSec * 10) / 10.0},$prestageFailJson,"staging":$stagingJson,"queries":$qs,"spread":$spread,"fingerprints":$fps,$fpChangedJson,"sf":"$sfDir"}"""
-    val w = new java.io.PrintWriter(detailPath); try w.println(fullJson) finally w.close()
-    // baseline medians from BASELINE.md's `| name | median | spread |` table
-    val baseline: Map[String, Double] = scala.util.Try {
-      val f = new java.io.File("BASELINE.md")
-      if (!f.isFile) Map.empty[String, Double]
-      else {
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.getLines().flatMap { line =>
-          line.split("\\|").map(_.trim).filter(_.nonEmpty) match {
-            case Array(name, med, _*) if bench.contains(name) =>
-              scala.util.Try(med.toDouble).toOption.map(name -> _)
-            case _ => None
-          }
-        }.toMap
-        finally src.close()
-      }
-    }.getOrElse(Map.empty) // a baseline parse hiccup must never kill the bench
-    def r3(v: Double) = math.round(v * 1000) / 1000.0
     val ratios = results.collect {
       case (k, m, _, _) if m >= 0 && baseline.get(k).exists(_ > 0) => (k, m / baseline(k))
     }
@@ -244,7 +349,18 @@ object Bench {
       if (ratios.isEmpty) ("none", -1.0) else ratios.maxBy(_._2)
     val top5 = results.filter(_._2 >= 0).sortBy(-_._2).take(5)
       .map { case (k, m, _, _) => s"\"" + k + "\":" + r3(m) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","failures":$failures,"runs":$nRuns,"n_queries":${results.size},"worst_ratio_vs_baseline":${r3(worstR)},"worst_query":"$worstQ","fingerprint_changes":${fpChanged.size},$fpChangedJson,$calib,"prestage_sec":${math.round(prestageSec * 10) / 10.0},$prestageFailJson,"queries":$top5,"detail":"$detailPath","sf":"$sfDir"}""")
-    spark.stop()
+    val stdoutLine = s"""{"metric":"total","value":${r3(total)},"unit":"sec","failures":$failures,"runs":$nRuns,"n_queries":${results.size},"worst_ratio_vs_baseline":${r3(worstR)},"worst_query":"$worstQ","fingerprint_changes":${fpChanged.size},$fpChangedJson,$calib,"prestage_sec":${math.round(prestageSec * 10) / 10.0},$prestageFailJson,"queries":$top5,"detail":"$detailPath","sf":"$sfDir"}"""
+    spark.stop() // drains the listener bus: every task and stage event is in
+    // each query's layers come from its median run (a failed run sorts first)
+    val layersJson = names.sorted.map { name =>
+      val run = (1 to nRuns).sortBy(i => runs(i - 1)(name)).apply(nRuns / 2)
+      val (build, execute) = split.getOrElse((name, run), (-1.0, -1.0))
+      jsonString(name) + ":" + layerJson(run, build, execute,
+        layers.runs.getOrElse(s"$name#$run", new layers.Run))
+    }.mkString("{", ",", "}")
+    val fullJson =
+      s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"runs":$nRuns,$calib,"prestage_sec":${math.round(prestageSec * 10) / 10.0},$prestageFailJson,"staging":$stagingJson,"queries":$qs,"spread":$spread,"fingerprints":$fps,$fpChangedJson,"layers":$layersJson,"sf":"$sfDir"}"""
+    val w = new java.io.PrintWriter(detailPath); try w.println(fullJson) finally w.close()
+    println(stdoutLine)
   }
 }

@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Tuned session factory for library users (the driver harness builds its own
-  * sessions in Verify/Bench; this is the front door for everyone else).
+/** The one session factory. Library users, the harness mains (Verify,
+  * Bench, Explain, ScaleSmoke), the test suites and the corpus benchmark
+  * all build their session through `builder`, so the tests and the DuckDB
+  * oracle certify the session shape that users and the benchmark run.
   *
   * Defaults that matter at scale: AQE on (runtime coalescing + skew-join
   * splitting), shuffle partitions sized to the cluster not the 200 default,
@@ -30,6 +32,17 @@ object GraftSession {
       // under the gate at runtime
       .config("spark.driver.maxResultSize", "4g")
       .config("spark.sql.session.timeZone", "UTC")
+
+  /** The harness session: `builder` at local[cpus] with one shuffle
+    * partition per core and no UI. The mains take `cpus` from
+    * `SPARK_GRAFT_CPUS`, else every core the JVM sees. */
+  private[graft] def harness(
+      cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt),
+      logLevel: String = "WARN"): SparkSession = {
+    val s = builder(s"local[$cpus]", cpus).config("spark.ui.enabled", "false").getOrCreate()
+    s.sparkContext.setLogLevel(logLevel)
+    s
+  }
 
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()

@@ -206,22 +206,31 @@ object ScaleSmoke {
       .write.mode("overwrite").parquet(s"$out/orders.parquet")
   }
 
+  /** Harness-only measurements that are not SparkEntry queries. */
+  private val custom: Map[String, (SparkSession, String) => DataFrame] = Map(
+    // the production append path alone (probe + union, no proof arm)
+    "dedup_index_append_apply" ->
+      ((s: SparkSession, d: String) => operators.Dedup.indexAppendApply(s, d)),
+    // streaming_join_outer split-measured (the ivfpq build/search
+    // pattern): _stage = the harness half (normalize + sentinel write),
+    // the full query = stage + two-phase watermark replay; replay cost
+    // is the difference
+    "streaming_join_outer_stage" -> { (s, d) =>
+      val (staged, _) = streaming.EventStream.stageJoinOuterInputs(s, d)
+      graft.sources.Staging.deleteRecursively(staged.toFile)
+      s.range(1).toDF("ok")
+    })
+
+  /** Builders by name from SparkEntry.queries (or `custom`), in order; an
+    * unknown name fails the run before anything is measured. */
+  private def resolve(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val registry = SparkEntry.queries ++ custom
+    names.map(n => n -> registry.getOrElse(n,
+      throw new IllegalArgumentException(s"ScaleSmoke: no query named $n")))
+  }
+
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "96g")
-      // Graph.closingBroadcastGate admits closing-side broadcasts up to
-      // ~800 MB-1.4 GB of packed rows; BroadcastExchange COLLECTS that to
-      // the driver first, and the default maxResultSize (1g) would kill
-      // edge counts in the 40-50M band at runtime instead of letting the
-      // gate decide. 4g clears the gate's worst case with headroom.
-      .config("spark.driver.maxResultSize", "4g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
 
     val small = "/root/testdata/sf0.1"
     val big = new java.io.File("scale_sf1").getAbsolutePath
@@ -257,10 +266,13 @@ object ScaleSmoke {
         println(s"[scale] staging 100x replicas of $small -> $big10")
         stage100(spark, small, big10)
       }
-      val names: Set[String] =
-        if (args.length > 1) args.drop(1).toSet
-        else Set("q_clustering_coeff", "dedup_clusters",
+      val names: Seq[String] =
+        if (args.length > 1) args.drop(1).toSeq
+        else Seq("q_clustering_coeff", "dedup_clusters",
           "dedup_cluster_canonical", "dedup_containment",
+          // the one plausibly-superlinear plan left after r9 (first-decade
+          // staged exponent 1.22 on a noisy sf1 cell): the wedge family's
+          // second-decade reading
           "q_triangle_count_staged",
           // the daily-ingest dedup path (r10 verdict item 6): the family
           // the 100 TB story leans on hardest gets the full decade triple
@@ -303,32 +315,7 @@ object ScaleSmoke {
         println(s"[scale] staging 100x orders -> $big10")
         stage100Orders(spark, small, big10)
       }
-      val qs: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-        "q_clustering_coeff" -> (operators.Graph.qClusteringCoeff _),
-        // the one plausibly-superlinear plan left after r9 (first-decade
-        // staged exponent 1.22 on a noisy sf1 cell): the wedge family's
-        // second-decade reading
-        "q_triangle_count_staged" -> (operators.Graph.qTriangleCountStaged _),
-        "q_clustering_coeff_staged" -> (operators.Graph.qClusteringCoeffStaged _),
-        "dedup_clusters" -> (operators.Dedup.dedupClusters _),
-        "dedup_cluster_canonical" -> (operators.Dedup.dedupClusterCanonical _),
-        "dedup_containment" -> (operators.Dedup.dedupContainment _),
-        "dedup_incremental_staged" -> (operators.Dedup.dedupIncrementalStaged _),
-        "dedup_index_append_apply" ->
-          ((s: SparkSession, d: String) => operators.Dedup.indexAppendApply(s, d)),
-        "llm_pretrain_e2e" -> (operators.LlmPretrain.llmPretrainE2e _),
-        "q_label_propagation" -> (operators.Graph.qLabelPropagation _),
-        "q_hits" -> (operators.Graph.qHits _),
-        "dedup_substring_recall" -> (operators.Dedup.dedupSubstringRecall _),
-        "dedup_substring_rewrite" -> (operators.Dedup.dedupSubstringRewrite _),
-        "text_dedup_lines" -> (operators.TextAnalysis.textDedupLines _),
-        "q_kcore_staged" -> (operators.Graph.qKcoreStaged _),
-        "text_unigram_train" -> (operators.UnigramLm.textUnigramTrain _),
-        "streaming_neardup" -> (operators.Dedup.streamingNeardup _),
-        "streaming_neardup_watermarked" ->
-          (operators.Dedup.streamingNeardupWatermarked _),
-        "dedup_substring_within" -> (operators.Dedup.dedupSubstringWithin _)
-      ).filter(q => names.contains(q._1))
+      val qs = resolve(names)
       qs.foreach { case (_, fn) => // warmup (JIT + codegen), untimed
         fn(spark, small).count(); spark.catalog.clearCache()
       }
@@ -367,106 +354,48 @@ object ScaleSmoke {
       return
     }
 
-    // optional args = subset of query names to measure (default: all)
-    val allQueries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-      "q_pagerank_copurchase" -> operators.Graph.qPagerankCopurchase,
-      "q_triangle_count" -> operators.Graph.qTriangleCount,
-      "dedup_containment" -> operators.Dedup.dedupContainment,
-      "dedup_clusters" -> operators.Dedup.dedupClusters,
-      "dedup_semantic_clusters" -> operators.Dedup.dedupSemanticClusters,
-      "dedup_ngram_jaccard" -> operators.Dedup.dedupNgramJaccard,
-      "dedup_minhash_lsh" -> operators.Dedup.dedupMinhashLsh,
-      "sim_knn_graph" -> operators.Similarity.simKnnGraph,
-      "q_label_propagation" -> operators.Graph.qLabelPropagation,
-      "dedup_overlap_sketch" -> operators.Dedup.dedupOverlapSketch,
-      "sim_ann_ivfpq" -> operators.Similarity.simAnnIvfpq,
-      "q_interval_overlap" -> operators.Sessionize.qIntervalOverlap,
-      "q_degree_hist" -> operators.Graph.qDegreeHist,
-      "q_kmv_union" -> operators.Relational.qKmvUnion,
-      "sim_power_iteration" -> operators.Similarity.simPowerIteration,
-      "text_novelty" -> operators.TextAnalysis.textNovelty,
-      "mm_byte_histogram" -> operators.Multimodal.mmByteHistogram,
-      "q_rolling_wau" -> operators.Sessionize.qRollingWau,
-      "q_bfs_layers" -> operators.Graph.qBfsLayers,
-      "q_kcore" -> operators.Graph.qKcore,
-      "q_itemsets_apriori" -> operators.Mining.qItemsetsApriori,
-      "dedup_incremental" -> operators.Dedup.dedupIncremental,
-      "sim_ann_sq" -> operators.Similarity.simAnnSq,
-      "text_quality_auc" -> operators.TextAnalysis.textQualityAuc,
-      "q_skew_profile" -> operators.Skew.qSkewProfile,
-      "dedup_retention_funnel" -> operators.Dedup.dedupRetentionFunnel,
-      "dedup_cluster_canonical" -> operators.Dedup.dedupClusterCanonical,
-      "sim_matryoshka" -> operators.Similarity.simMatryoshka,
-      "q_join_size_estimate" -> operators.Skew.qJoinSizeEstimate,
-      "text_ngram_entropy" -> operators.TextAnalysis.textNgramEntropy,
-      "q_hits" -> operators.Graph.qHits,
-      "q_assortativity" -> operators.Graph.qAssortativity,
-      "dedup_substring" -> operators.Dedup.dedupSubstring,
-      "mm_image_neardup" -> operators.Multimodal.mmImageNeardup,
-      "q_survival_km" -> operators.Sessionize.qSurvivalKm,
-      "streaming_kmv" -> streaming.EventStream.streamingKmv,
-      "q_clustering_coeff" -> operators.Graph.qClusteringCoeff,
-      "sim_label_spread" -> operators.Similarity.simLabelSpread,
-      "q_sssp_weighted" -> operators.Graph.qSsspWeighted,
-      "corpus_warc_ingest" -> sources.WarcIngest.warcIngest,
-      "q_attribution_markov" -> operators.Attribution.qAttributionMarkov,
-      "q_attribution_position" -> operators.Attribution.qAttributionPosition,
-      "corpus_compaction_plan" -> sources.Compaction.compactionPlan,
-      "text_bpe_encode" -> operators.BpeTrain.textBpeEncode,
-      "q_peak_concurrency" -> operators.Sessionize.qPeakConcurrency,
-      "q_analyze_stats" -> operators.Relational.qAnalyzeStats,
-      "q_graph_modularity" -> operators.Graph.qGraphModularity,
-      "q_graph_modularity_staged" -> operators.Graph.qGraphModularityStaged,
-      "dedup_index_append" -> operators.Dedup.dedupIndexAppend,
-      // the production append path alone (probe + union, no proof arm)
-      "dedup_index_append_apply" ->
-        ((s: SparkSession, d: String) =>
-          operators.Dedup.indexAppendApply(s, d)),
-      "q_hits_staged" -> operators.Graph.qHitsStaged,
-      "dedup_retention_funnel_staged" ->
-        operators.Dedup.dedupRetentionFunnelStaged,
-      "q_triangle_count_staged" -> operators.Graph.qTriangleCountStaged,
-      "q_clustering_coeff_staged" -> operators.Graph.qClusteringCoeffStaged,
-      "q_label_propagation_staged" -> operators.Graph.qLabelPropagationStaged,
-      "q_pagerank_copurchase_staged" -> operators.Graph.qPagerankCopurchaseStaged,
-      "dedup_minhash_lsh_staged" -> operators.Dedup.dedupMinhashLshStaged,
-      "dedup_incremental_staged" -> operators.Dedup.dedupIncrementalStaged,
-      "dedup_clusters_staged" -> operators.Dedup.dedupClustersStaged,
-      "dedup_cluster_canonical_staged" -> operators.Dedup.dedupClusterCanonicalStaged,
-      "dedup_semantic_clusters_staged" -> operators.Dedup.dedupSemanticClustersStaged,
-      "sim_ann_ivf_staged" -> operators.Similarity.simAnnIvfStaged,
-      "sim_ann_ivfpq_staged" -> operators.Similarity.simAnnIvfpqStaged,
-      // streaming_join_outer split-measured (the ivfpq build/search
-      // pattern): _stage = the harness half (normalize + sentinel write),
-      // the full query = stage + two-phase watermark replay; replay cost
-      // is the difference
-      "streaming_join_outer_stage" -> { (s, d) =>
-        val (staged, _) = streaming.EventStream.stageJoinOuterInputs(s, d)
-        graft.sources.Staging.deleteRecursively(staged.toFile)
-        s.range(1).toDF("ok")
-      },
-      "streaming_join_outer" -> streaming.EventStream.streamingJoinOuter,
+    // optional args = query names to measure (default: this list)
+    val standard = Seq(
+      "q_pagerank_copurchase", "q_triangle_count", "dedup_containment",
+      "dedup_clusters", "dedup_semantic_clusters", "dedup_ngram_jaccard",
+      "dedup_minhash_lsh", "sim_knn_graph", "q_label_propagation",
+      "dedup_overlap_sketch", "sim_ann_ivfpq", "q_interval_overlap",
+      "q_degree_hist", "q_kmv_union", "sim_power_iteration", "text_novelty",
+      "mm_byte_histogram", "q_rolling_wau", "q_bfs_layers", "q_kcore",
+      "q_itemsets_apriori", "dedup_incremental", "sim_ann_sq",
+      "text_quality_auc", "q_skew_profile", "dedup_retention_funnel",
+      "dedup_cluster_canonical", "sim_matryoshka", "q_join_size_estimate",
+      "text_ngram_entropy", "q_hits", "q_assortativity", "dedup_substring",
+      "mm_image_neardup", "q_survival_km", "streaming_kmv",
+      "q_clustering_coeff", "sim_label_spread", "q_sssp_weighted",
+      "corpus_warc_ingest", "q_attribution_markov", "q_attribution_position",
+      "corpus_compaction_plan", "text_bpe_encode", "q_peak_concurrency",
+      "q_analyze_stats", "q_graph_modularity", "q_graph_modularity_staged",
+      "dedup_index_append", "dedup_index_append_apply", "q_hits_staged",
+      "dedup_retention_funnel_staged", "q_triangle_count_staged",
+      "q_clustering_coeff_staged", "q_label_propagation_staged",
+      "q_pagerank_copurchase_staged", "dedup_minhash_lsh_staged",
+      "dedup_incremental_staged", "dedup_clusters_staged",
+      "dedup_cluster_canonical_staged", "dedup_semantic_clusters_staged",
+      "sim_ann_ivf_staged", "sim_ann_ivfpq_staged",
+      "streaming_join_outer_stage", "streaming_join_outer",
       // the RA wedge family's unmeasured member (r10 verdict item 5): the
       // no-sort-over-wedges claim needs an exponent, not just a plan pin
-      "q_link_predict" -> operators.Graph.qLinkPredict,
+      "q_link_predict",
       // the composed curation pipeline: its exponent is the headline
       // 100 TB statement (every stage is bucketed/blocked/broadcast)
-      "llm_pretrain_e2e" -> operators.LlmPretrain.llmPretrainE2e,
+      "llm_pretrain_e2e",
       // r15 additions: the compaction APPLY rewrite (one (source,bucket)
       // exchange + one file per plan bucket), the overlapped-chunking
       // transform (one doc_id exchange), and the stream-static band-index
       // probe (staged-index read + micro-batch replay harness)
-      "corpus_compaction_apply" -> sources.Compaction.compactionApply,
-      "text_chunk_overlap" -> operators.TextAnalysis.textChunkOverlap,
-      "streaming_neardup" -> operators.Dedup.streamingNeardup,
+      "corpus_compaction_apply", "text_chunk_overlap", "streaming_neardup",
       // r16 additions: bounded-state watermarked probe, within-doc
       // ExactSubstr, and the t-closeness governance aggregate
-      "streaming_neardup_watermarked" ->
-        operators.Dedup.streamingNeardupWatermarked,
-      "dedup_substring_within" -> operators.Dedup.dedupSubstringWithin,
-      "q_tcloseness" -> operators.Privacy.qTcloseness)
+      "streaming_neardup_watermarked", "dedup_substring_within",
+      "q_tcloseness")
     val queries =
-      if (args.isEmpty) allQueries else allQueries.filter(q => args.contains(q._1))
+      resolve(if (args.isEmpty) standard else args.toSeq.filterNot(_ == "sim_ann_ivfpq_split"))
 
     // warmup (JIT + codegen) on the small dir, untimed
     queries.foreach { case (_, fn) =>

@@ -31,8 +31,8 @@ object Tables {
     * TIMESTAMP_NTZ when isAdjustedToUTC=false) — so normalize whatever
     * arrives to the long-nanos convention here, at the single load site.
     *
-    * The NTZ→instant cast uses the session time zone; every graft session
-    * (GraftSession, Verify, Bench, tests) pins UTC, matching the DuckDB
+    * The NTZ→instant cast uses the session time zone; GraftSession.builder,
+    * which builds every graft session, pins UTC, matching the DuckDB
     * oracle's epoch_ms semantics on the same files.
     *
     * DELIBERATE side effect: nanosAsLong is a session conf, so after the

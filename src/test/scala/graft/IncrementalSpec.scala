@@ -13,7 +13,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("second run rewrites only the mutated partition") {
     import SparkSpec.spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_incr").toString + "/docs"
+    val out = tempDir("graft_incr").toString + "/docs"
     val double = (df: org.apache.spark.sql.DataFrame) =>
       df.withColumn("v2", col("v") * 2)
 
@@ -55,7 +55,7 @@ class IncrementalSpec extends SparkSpec {
     // one-partition upstream edit must recompute exactly one partition in
     // BOTH stages; every other downstream partition keeps its files.
     import SparkSpec.spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_dag").toString
+    val root = tempDir("graft_dag").toString
     val (out1, out2) = (s"$root/normalized", s"$root/tagged")
     val normalize = (df: org.apache.spark.sql.DataFrame) =>
       df.withColumn("text", lower(col("text")))
@@ -99,7 +99,7 @@ class IncrementalSpec extends SparkSpec {
     // adversarial partition count: 64 partitions against a threshold of 8 —
     // the manifest must live as a parquet table, never a driver line file,
     // and a one-partition delta must still rewrite exactly one partition
-    val out = java.nio.file.Files.createTempDirectory("graft_incr_pq").toString + "/docs"
+    val out = tempDir("graft_incr_pq").toString + "/docs"
     val ident = (df: org.apache.spark.sql.DataFrame) => df
     def mk(mut: Boolean) = SparkSpec.spark.range(256)
       .select(col("id"),
@@ -136,7 +136,7 @@ class IncrementalSpec extends SparkSpec {
     // an IN-list selection would inline 10^4-10^5 literals into the plan.
     // Asserts the write's physical plan uses LeftSemi and carries (almost)
     // no partition-value literals.
-    val out = java.nio.file.Files.createTempDirectory("graft_incr_semi").toString + "/docs"
+    val out = tempDir("graft_incr_semi").toString + "/docs"
     val ident = (df: org.apache.spark.sql.DataFrame) => df
     def mk(mut: Boolean) = SparkSpec.spark.range(256)
       .select(col("id"),

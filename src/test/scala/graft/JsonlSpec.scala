@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class JsonlSpec extends SparkSpec {
 
   test("jsonl read infers schema and flattens one level like json_normalize") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_fixture")
+    val dir = tempDir("graft_jsonl_fixture")
     java.nio.file.Files.writeString(dir.resolve("recs.jsonl"),
       """{"id": 1, "user": {"name": "ann", "meta": {"x": 9}}, "score": 1.5}
         |{"id": 2, "user": {"name": "bo"}, "score": 2.5, "extra": "e"}
@@ -25,7 +25,7 @@ class JsonlSpec extends SparkSpec {
   }
 
   test("normalizeToParquet round-trips the flattened table") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_np")
+    val dir = tempDir("graft_jsonl_np")
     java.nio.file.Files.writeString(dir.resolve("recs.jsonl"),
       """{"id": 1, "user": {"name": "ann"}}
         |{"id": 2, "user": {"name": "bo"}}
@@ -38,7 +38,7 @@ class JsonlSpec extends SparkSpec {
 
   test("v2 connector: inference, filter pushdown and column pruning in the scan") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_v2")
+    val dir = tempDir("graft_jsonl_v2")
     java.nio.file.Files.writeString(dir.resolve("a.jsonl"),
       """{"id": 1, "kind": "x", "score": 1.5, "extra": "keep"}
         |{"id": 2, "kind": "y", "score": 0.25, "extra": "drop"}

@@ -11,7 +11,7 @@ class QuarantineSpec extends SparkSpec {
     .add("id", LongType).add("name", StringType).add("x", DoubleType)
 
   private def stageLines(lines: Seq[String]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_quar_spec")
+    val dir = tempDir("graft_quar_spec")
     java.nio.file.Files.write(dir.resolve("part-0.jsonl"),
       lines.mkString("\n").getBytes("UTF-8"))
     dir.toString

@@ -95,7 +95,7 @@ class SchemaNormalizerSpec extends SparkSpec {
   }
 
   test("readXlsx conforms a real .xlsx fixture (shared/inline/numeric/sparse cells)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_xlsx")
+    val dir = tempDir("graft_xlsx")
     writeXlsxFixture(dir.resolve("bills.xlsx"),
       header = Seq("State", "Bill No.", "Title", "Status", "Last Action Date"),
       rows = Seq(
@@ -120,7 +120,7 @@ class SchemaNormalizerSpec extends SparkSpec {
   }
 
   test("readCsv conforms a real CSV file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv")
+    val dir = tempDir("graft_csv")
     val f = dir.resolve("bills.csv")
     java.nio.file.Files.writeString(f,
       "STATE,Bill No.,bill title,STATUS\nWA,HB 1234,Safe storage,Passed\n")

@@ -6,7 +6,7 @@ import graft.sources.Sinks
 class SinksSpec extends SparkSpec {
 
   test("partitioned parquet roundtrip with hive-style directories") {
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/orders_by_status"
+    val out = tempDir("graft_sink").toString + "/orders_by_status"
     val orders = Tables.orders(spark, sf)
     Sinks.writePartitioned(orders, out, "o_orderstatus")
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).toSet
@@ -60,7 +60,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("csv export roundtrip keeps the header and rows") {
-    val out = java.nio.file.Files.createTempDirectory("graft_csv_sink").toString + "/summary"
+    val out = tempDir("graft_csv_sink").toString + "/summary"
     val df = operators.Corpus.corpusSummary(spark, sf)
     Sinks.writeCsv(df, out)
     val back = spark.read.option("header", "true").csv(out)

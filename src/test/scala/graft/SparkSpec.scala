@@ -3,23 +3,32 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide session, lazy). */
+import scala.collection.mutable
+
+/** Shared local session for all suites (one JVM-wide session, lazy): the
+  * library's own session shape (GraftSession), at local[4]. */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.harness(cpus = 4, logLevel = "ERROR")
   val sf: String = "/root/testdata/sf0.001"
 }
 
 abstract class SparkSpec extends AnyFunSuite {
   def spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.sf
+
+  private val tempDirs = mutable.Buffer[java.io.File]()
+
+  /** A fresh java.io.tmpdir/<prefix>* directory, removed when the test ends. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs += d.toFile
+    d
+  }
+
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally {
+      tempDirs.foreach(sources.Staging.deleteRecursively)
+      tempDirs.clear()
+    }
 }

@@ -22,7 +22,7 @@ class ZipIngestSpec extends SparkSpec {
   }
 
   test("hand-built archives: every entry surfaces once, payload byte-exact, dirs skipped") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zip_spec")
+    val dir = tempDir("graft_zip_spec")
     writeZip(dir, "a.zip", Seq(
       "x/" -> "", // directory entry: must not surface
       "x/one.json" -> """{"k":1}""",
