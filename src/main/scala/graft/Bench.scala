@@ -6,12 +6,11 @@ import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Driver benchmark: one JSON line of per-query seconds at the SF dir given
-  * by SPARK_GRAFT_SF_DIR. An untimed PRE-STAGE sweep over the full suite at
-  * the bench dataset runs first: it forces every managed staged layout to
-  * exist and pays JVM JIT / first-use Spark initialization, so the timed
-  * numbers measure steady-state execution — staging cost is reported
-  * separately (prestage_sec + the per-layout "staging" map), never inside
-  * a timed median.
+  * by SPARK_GRAFT_SF_DIR. An untimed PRE-STAGE over the `Layouts.all`
+  * registry at the bench dataset runs first: it forces every managed staged
+  * layout to exist, so staging cost is reported separately (prestage_sec +
+  * the per-layout "staging" map), never inside a timed median; a layout
+  * staged during the timed runs is named in "prestage_misses".
   *
   * Each query runs SPARK_GRAFT_BENCH_RUNS times (default 3) and reports the
   * MEDIAN; the per-query min..max spread is kept in the JSON under "spread".
@@ -201,37 +200,24 @@ object Bench {
     // artifact-row class: staged-family consumers read 3–5x in cold driver
     // runs with unchanged plans). Since r16 the layouts derive DIRECTLY
     // from the explicit registry (graft.Layouts — the r15 full-suite sweep
-    // spent 584 s first-executing all queries to reach ~59 s of staging);
-    // SPARK_GRAFT_BENCH_FULL_PRESTAGE=1 restores the full sweep for
-    // opt-in page-cache warmth. A registry gap cannot hide: the timed
-    // loop below diffs Staging.stagingCosts keys and names any layout
-    // staged DURING timed runs as a prestage_misses artifact entry.
+    // spent 584 s first-executing all queries to reach ~59 s of staging).
+    // A registry gap cannot hide: the timed loop below diffs
+    // Staging.stagingCosts keys and names any layout staged DURING timed
+    // runs as a prestage_misses artifact entry.
     // Staging cost is REPORTED, not hidden: prestage_sec on the stdout
     // line, per-layout seconds in bench_full.json ("staging").
-    val fullSweep =
-      sys.env.get("SPARK_GRAFT_BENCH_FULL_PRESTAGE").contains("1")
     val tPre = System.nanoTime()
     // prestage failures land in the ARTIFACT (not just stderr): a silently
     // broken staging path would otherwise cold-stage inside a timed median
     // and surface only as an unexplained >=2x row
     val prestageFailures = scala.collection.mutable.ArrayBuffer[String]()
-    if (fullSweep) {
-      bench.foreach { case (name, fn) =>
-        try fn(spark, sfDir).count()
-        catch { case e: Throwable =>
-          prestageFailures += name
-          System.err.println(s"[bench] prestage $name failed: ${e.getMessage}") }
-        spark.catalog.clearCache() // don't let warmup caches pollute timings
-      }
-    } else {
-      Layouts.all.foreach { case (name, stage) =>
-        try stage(spark, sfDir)
-        catch { case e: Throwable =>
-          prestageFailures += name
-          System.err.println(s"[bench] prestage $name failed: ${e.getMessage}") }
-      }
-      spark.catalog.clearCache()
+    Layouts.all.foreach { case (name, stage) =>
+      try stage(spark, sfDir)
+      catch { case e: Throwable =>
+        prestageFailures += name
+        System.err.println(s"[bench] prestage $name failed: ${e.getMessage}") }
     }
+    spark.catalog.clearCache()
     val prestageSec = (System.nanoTime() - tPre) / 1e9
     val stagingCosts = graft.sources.Staging.stagingCosts
     val prestagedTags = stagingCosts.keySet

@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   * added, and (2) Bench self-audits it by diffing Staging.stagingCosts
   * keys before/after the timed loop — any layout staged DURING timed runs
   * is named in the artifact as a `prestage_misses` entry, so a registry
-  * gap is visible, not silent. `SPARK_GRAFT_BENCH_FULL_PRESTAGE=1`
-  * restores the full first-execution sweep (opt-in page-cache warmth).
+  * gap is visible, not silent. The registry is the only pre-stage path:
+  * there is no full first-execution sweep to fall back to.
   *
   * Entries are family-grain thunks (each family stages its own layouts via
   * a private[graft] prestage hook); per-layout seconds still land in

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Column-level text operations — the reference's per-document Python string
@@ -10,9 +11,12 @@ import org.apache.spark.sql.functions._
   * `org.apache.spark.sql.functions._` so every operation stays inside
   * whole-stage codegen — no UDFs, no Python, nothing driver-side.
   *
-  * Each function documents its exact DuckDB-SQL equivalent; oracle SQL in the
-  * operator files must mirror these expressions verbatim (same regexes, same
-  * guard order) so results hash-match.
+  * The whitespace-token rule lives here once per engine: `wsTokens` (and the
+  * `kgrams` step over its positions) for Spark, and beside each function its
+  * DuckDB twin (`…Sql`, a `String => String` SQL builder). Operators take
+  * their tokens from these functions and oracles call the twins, so the two
+  * engines cannot drift apart site by site. The twins spell whitespace as
+  * the explicit class of Java's `\s` — RE2's `\s` omits the vertical tab.
   */
 object TextFunctions {
 
@@ -24,19 +28,26 @@ object TextFunctions {
     * family — translate is a plain table lookup per char, no NFA). */
   private val wsChars = " \t\n\u000B\f\r"
 
+  /** The same set in RE2 escapes, for the DuckDB twins. */
+  private val wsSet = raw" \t\n\x0B\f\r"
+  private val wsClass = s"[$wsSet]"
+
   /** Strip leading/trailing whitespace of ALL kinds. SQL `trim()` (Spark and
     * DuckDB alike) removes only spaces — Python's `.strip()`/`.split()`
     * semantics in the reference need tabs/newlines stripped too.
     * Implementation: `trim(BOTH <\s charset> FROM c)` — identical to the
     * previous regexp_replace(c, "^\\s+|\\s+$", "") on every string, ~10×
-    * cheaper. DuckDB oracle form stays regexp_replace(x, '^\s+|\s+$', '', 'g'). */
+    * cheaper. */
   def wsTrim(c: Column): Column =
     trim(c, wsChars)
 
+  /** DuckDB twin of [[wsTrim]]. */
+  def wsTrimSql(x: String): String =
+    raw"regexp_replace($x, '^$wsClass+|$wsClass+$$', '', 'g')"
+
   /** The reference's normalize_plain_text chain (normalize_corpus.py:117):
     * lowercase → HTML-entity decode → strip numeric-only lines → collapse
-    * spaces/tabs → collapse 3+ newlines → trim.
-    * DuckDB: regexp_replace(...,'g') chain with the same patterns. */
+    * spaces/tabs → collapse 3+ newlines → trim. */
   def normalizeText(c: Column): Column = {
     val n0 = lower(c)
     // literal entity decodes: replace() (plain substring scan) — identical
@@ -49,12 +60,36 @@ object TextFunctions {
     wsTrim(n5)
   }
 
-  /** Whitespace-token count (normalize_corpus.py:176 `len(raw_text.split())`).
-    * DuckDB: CASE WHEN length(<wsTrim>)=0 THEN 0 ELSE
-    * array_length(regexp_split_to_array(<wsTrim>,'\s+')) END. */
+  /** DuckDB twin of [[normalizeText]]: the same chain as global
+    * regexp_replace calls, the numeric-line pattern over the Java `\s` set. */
+  def normalizeTextSql(x: String): String =
+    wsTrimSql(
+      "regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(" +
+        raw"lower($x), '&amp;', '&', 'g'), '&nbsp;', ' ', 'g'), " +
+        raw"'(?m)^$wsClass*\d+$wsClass*$$', '', 'g'), '[ \t]+', ' ', 'g'), " +
+        raw"'\n{3,}', e'\n\n', 'g')")
+
+  /** Whitespace tokens: trim, split on `\s+`, no empty tokens — exactly the
+    * tokens [[wordCount]] counts. After the trim the only empty token split
+    * can yield is the one an empty string splits into; `array_remove` drops
+    * it (codegen'd, one pass) so an empty text explodes to no rows. */
+  def wsTokens(c: Column): Column =
+    array_remove(split(wsTrim(c), "\\s+"), "")
+
+  /** DuckDB twin of [[wsTokens]]: the maximal runs of non-whitespace, which
+    * are the trimmed split's tokens without the empty one. */
+  def wsTokensSql(x: String): String =
+    s"regexp_extract_all($x, '[^$wsSet]+')"
+
+  /** Whitespace-token count (normalize_corpus.py:176 `len(raw_text.split())`)
+    * — the size of [[wsTokens]], kept as its own guarded expression. */
   def wordCount(c: Column): Column =
     when(length(wsTrim(c)) === 0, lit(0L))
       .otherwise(size(split(wsTrim(c), "\\s+")).cast("long"))
+
+  /** DuckDB twin of [[wordCount]]. */
+  def wordCountSql(x: String): String =
+    s"len(${wsTokensSql(x)})"
 
   /** Count of non-overlapping occurrences of literal `marker` (length-delta
     * trick; exact, codegen'd). DuckDB:
@@ -81,11 +116,36 @@ object TextFunctions {
   def nonSpaceCount(c: Column): Column =
     length(translate(c, wsChars, "")).cast("long")
 
-  /** Distinct k-word shingles of a whitespace-tokenized text, as an array
-    * column. Empty array when the text has fewer than k tokens.
-    * Built from split + transform + slice — fully codegen'd, no UDF. */
+  /** The k-gram step (k ≥ 2) over a positioned token relation (doc_id,
+    * pos, tok) — a posexplode of [[wsTokens]]: one row (doc_id, `as`) per
+    * run of k consecutive tokens, joined by single spaces. A lead window over
+    * (doc_id ORDER BY pos) and a null filter on the last lead, so a document
+    * with fewer than k tokens has no k-grams. */
+  def kgrams(toks: DataFrame, k: Int, as: String): DataFrame = {
+    require(k >= 2, s"kgrams needs k >= 2, got $k")
+    val w = Window.partitionBy("doc_id").orderBy("pos")
+    val next = (1 until k).map(i => s"t$i")
+    toks
+      .select(col("doc_id") +: col("tok") +:
+        next.zipWithIndex.map { case (n, i) => lead("tok", i + 1).over(w).as(n) }: _*)
+      .filter(col(next.last).isNotNull)
+      .select(col("doc_id"), concat_ws(" ", col("tok") +: next.map(col): _*).as(as))
+  }
+
+  /** DuckDB twin of [[kgrams]] over a relation `rel` of (doc_id, t) token
+    * arrays: a SELECT of (doc_id, `as`), 1-based list indexing. */
+  def kgramsSql(rel: String, k: Int, as: String): String = {
+    val gram = (0 until k).map(j => if (j == 0) "t[i]" else s"t[i+$j]").mkString(" || ' ' || ")
+    s"""SELECT doc_id, $gram AS $as
+       |FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - ${k - 1})) AS i
+       |      FROM $rel WHERE len(t) >= $k)""".stripMargin
+  }
+
+  /** Distinct k-word shingles of [[wsTokens]], as an array column — the one
+    * array-form shingle. Empty array when the text has fewer than k tokens.
+    * Built from transform + slice over the token array, no UDF. */
   def wordShingles(c: Column, k: Int): Column = {
-    val toks = split(wsTrim(c), "\\s+")
+    val toks = wsTokens(c)
     val n = size(toks)
     array_distinct(
       when(n < k, array().cast("array<string>"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.functions.TextFunctions.{wsTokens, wsTokensSql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -47,9 +48,7 @@ object BpeTrain {
 
   private[graft] def bpeRun(docs: DataFrame, r: Int): BpeResult = {
     val toks = docs
-      .select(explode(split(graft.functions.TextFunctions.wsTrim(col("text")),
-        "\\s+")).as("word"))
-      .filter(length(col("word")) > 0)
+      .select(explode(wsTokens(col("text"))).as("word"))
     val wc = toks.groupBy("word").agg(count(lit(1)).as("freq"))
     // initial symbol sequence: one row per (word type, char position)
     var seq = wc
@@ -180,14 +179,11 @@ object BpeTrain {
     * identically. */
   private val preludeSql: String =
     s"""dtoks AS (
-       |  SELECT doc_id, unnest(regexp_split_to_array(
-       |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+')) AS word
-       |  FROM documents
+       |  SELECT doc_id, unnest(${wsTokensSql("text")}) AS word FROM documents
        |), toks AS (
        |  SELECT word FROM dtoks
        |), wc AS (
-       |  SELECT word, count(*) AS freq FROM toks WHERE length(word) > 0
-       |  GROUP BY word
+       |  SELECT word, count(*) AS freq FROM toks GROUP BY word
        |), s1 AS (
        |  SELECT word, freq, CAST(i - 1 AS BIGINT) AS pos, substr(word, i, 1) AS sym
        |  FROM (SELECT word, freq, unnest(generate_series(1, length(word))) AS i
@@ -235,9 +231,7 @@ object BpeTrain {
     val wordTok = fin.groupBy("word").agg(count(lit(1)).as("n_sym"))
     val docToks = docs
       .select(col("doc_id"),
-        explode(split(graft.functions.TextFunctions.wsTrim(col("text")),
-          "\\s+")).as("word"))
-      .filter(length(col("word")) > 0)
+        explode(wsTokens(col("text"))).as("word"))
     docToks.join(wordTok, "word")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"),

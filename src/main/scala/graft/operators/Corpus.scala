@@ -44,26 +44,14 @@ object Corpus {
       .orderBy("doc_id")
   }
 
-  // The SQL mirrors normalizeText / wordCount expression-for-expression.
-  private val normChainSql =
-    """regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-      |  lower(text), '&amp;', '&', 'g'), '&nbsp;', ' ', 'g'),
-      |  '(?m)^\s*\d+\s*$', '', 'g'), '[ \t]+', ' ', 'g'), '\n{3,}', e'\n\n', 'g'),
-      |  '^\s+|\s+$', '', 'g')""".stripMargin
-
-  private def wcSql(x: String) = {
-    val t = "regexp_replace(" + x + ", '^\\s+|\\s+$', '', 'g')"
-    "CASE WHEN length(" + t + ") = 0 THEN 0 ELSE array_length(regexp_split_to_array(" + t + ", '\\s+')) END"
-  }
-
   private val corpusNormalizeSql =
     s"""WITH n AS (
-       |  SELECT doc_id, $normChainSql AS normalized_text,
-       |    ${wcSql("text")} AS raw_word_count
+       |  SELECT doc_id, ${normalizeTextSql("text")} AS normalized_text,
+       |    ${wordCountSql("text")} AS raw_word_count
        |  FROM documents
        |), m AS (
        |  SELECT doc_id, normalized_text, raw_word_count,
-       |    ${wcSql("normalized_text")} AS normalized_word_count
+       |    ${wordCountSql("normalized_text")} AS normalized_word_count
        |  FROM n
        |)
        |SELECT doc_id, normalized_text, raw_word_count, normalized_word_count,
@@ -277,7 +265,7 @@ object Corpus {
   }
 
   private val corpusHtmlExtractSql =
-    """WITH h AS (
+    s"""WITH h AS (
       |  SELECT doc_id,
       |    '<html><body><h1>' || upper(lang) || '</h1><p>' || text ||
       |    '</p><s>struck clause ' || CAST(doc_id AS VARCHAR) ||
@@ -294,15 +282,14 @@ object Corpus {
       |      '<script>.*?</script>|<style>.*?</style>', '', 'g'),
       |      '<[^>]+>', ' ', 'g'),
       |      '&amp;', '&', 'g'), '&nbsp;', ' ', 'g'),
-      |      '\s+', ' ', 'g') AS sp
+      |      '\\s+', ' ', 'g') AS sp
       |  FROM st
       |)
       |SELECT doc_id,
-      |  regexp_replace(sp, '^\s+|\s+$', '', 'g') AS extracted_text,
+      |  ${wsTrimSql("sp")} AS extracted_text,
       |  length(html) - length(no_strike) AS strike_chars_removed,
       |  length(html) > length(no_strike) AS strikethrough_detected,
-      |  CASE WHEN length(regexp_replace(regexp_replace(sp, '^\s+|\s+$', '', 'g'), '^\s+|\s+$', '', 'g')) = 0 THEN 0
-      |       ELSE array_length(regexp_split_to_array(regexp_replace(sp, '^\s+|\s+$', '', 'g'), '\s+')) END AS extracted_word_count
+      |  ${wordCountSql("sp")} AS extracted_word_count
       |FROM ex ORDER BY doc_id""".stripMargin
 
   /** Base64 document payload decode — text_processor.py:23-40
@@ -424,8 +411,15 @@ object Corpus {
       .orderBy("doc_id")
   }
 
-  private val corpusDecodeDispatchSql =
-    """WITH base AS (
+  private val corpusDecodeDispatchSql = {
+    val stripped =
+      """regexp_replace(regexp_replace(
+        |        regexp_replace(regexp_replace(regexp_replace(payload,
+        |        '<script>.*?</script>|<style>.*?</style>', '', 'g'),
+        |        '<[^>]+>', ' ', 'g'),
+        |        '&amp;', '&', 'g'), '&nbsp;', ' ', 'g'),
+        |        '\s+', ' ', 'g')""".stripMargin
+    raw"""WITH base AS (
       |  SELECT doc_id,
       |    CASE WHEN source IN ('src0','src1','src2') THEN '.html'
       |         WHEN source IN ('src3','src4') THEN '.pdf'
@@ -442,12 +436,7 @@ object Corpus {
       |), ex AS (
       |  SELECT doc_id, ext,
       |    CASE ext
-      |      WHEN '.html' THEN regexp_replace(regexp_replace(regexp_replace(
-      |        regexp_replace(regexp_replace(regexp_replace(payload,
-      |        '<script>.*?</script>|<style>.*?</style>', '', 'g'),
-      |        '<[^>]+>', ' ', 'g'),
-      |        '&amp;', '&', 'g'), '&nbsp;', ' ', 'g'),
-      |        '\s+', ' ', 'g'), '^\s+|\s+$', '', 'g')
+      |      WHEN '.html' THEN ${wsTrimSql(stripped)}
       |      -- first-principles truth for the REAL PDF scanner: the payload
       |      -- frames `()\` || text (escaped) inside a BT..ET literal string,
       |      -- so a correct synthesize->scan->unescape round trip yields
@@ -463,6 +452,7 @@ object Corpus {
       |  length(extracted_text) AS extracted_chars,
       |  length(extracted_text) > 0 AS extract_ok
       |FROM ex ORDER BY doc_id""".stripMargin
+  }
 
   /** Deterministic stratified sampling — the reproducible alternative to
     * random reservoir sampling at 100 TB: rank by a content-derived hash
@@ -537,7 +527,7 @@ object Corpus {
   def corpusInvertedIndex(s: SparkSession, d: String): DataFrame = {
     val pairs = Tables.documents(s, d)
       .select(col("doc_id"),
-        explode(split(normalizeText(col("text")), "\\s+")).as("tok"))
+        explode(wsTokens(normalizeText(col("text")))).as("tok"))
       .groupBy("tok", "doc_id").agg(count(lit(1)).as("cnt"))
     val idx = pairs.groupBy("tok").agg(
       count(lit(1)).as("df"),
@@ -553,12 +543,8 @@ object Corpus {
   }
 
   private val corpusInvertedIndexSql =
-    """WITH toks AS (
-      |  SELECT doc_id,
-      |    unnest(regexp_split_to_array(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-      |      regexp_replace(regexp_replace(lower(text), '&amp;', '&', 'g'),
-      |      '&nbsp;', ' ', 'g'), '(?m)^\s*\d+\s*$', '', 'g'), '[ \t]+', ' ', 'g'),
-      |      '\n{3,}', e'\n\n', 'g'), '^\s+|\s+$', '', 'g'), '\s+')) AS tok
+    s"""WITH toks AS (
+      |  SELECT doc_id, unnest(${wsTokensSql(normalizeTextSql("text"))}) AS tok
       |  FROM documents
       |), pairs AS (
       |  SELECT tok, doc_id, count(*) AS cnt FROM toks GROUP BY tok, doc_id
@@ -604,9 +590,7 @@ object Corpus {
   }
 
   private val corpusSampleWeightedSql = {
-    val h = (0 until 15).map { j =>
-      s"(strpos('0123456789abcdef', substr(h, ${j + 1}, 1)) - 1) * ${BigInt(16).pow(14 - j)}"
-    }.mkString(" + ")
+    val h = OracleSql.hexPrefix("h", 15)
     s"""WITH hx AS (
        |  SELECT doc_id, lang, source, n_chars,
        |    md5('graft-wseed-1' || CAST(doc_id AS VARCHAR)) AS h
@@ -690,7 +674,7 @@ object Corpus {
     val budget = 1000000L
     val perSrc = Tables.documents(s, d)
       .select(col("source"),
-        size(split(col("text"), "\\s+")).cast("long").as("toks"))
+        wordCount(col("text")).as("toks"))
       .groupBy("source").agg(sum("toks").as("n_tokens"))
       .cache()
     val tot = broadcast(perSrc.agg(sum("n_tokens").as("n")))
@@ -711,10 +695,8 @@ object Corpus {
   }
 
   private val corpusTokenBudgetSql =
-    """WITH ps AS (
-      |  SELECT source,
-      |    CAST(sum(array_length(regexp_split_to_array(text, '\s+')))
-      |      AS BIGINT) AS n_tokens
+    s"""WITH ps AS (
+      |  SELECT source, CAST(sum(${wordCountSql("text")}) AS BIGINT) AS n_tokens
       |  FROM documents GROUP BY source
       |), tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS n FROM ps
       |), q AS (
@@ -764,27 +746,19 @@ object Corpus {
   def corpusTopTokens(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy("lang").orderBy(col("cnt").desc, col("tok").asc)
     Tables.documents(s, d)
-      .select(col("lang"), explode(split(normalizeText(col("text")), "\\s+")).as("tok"))
-      .filter(length(col("tok")) > 0)
+      .select(col("lang"), explode(wsTokens(normalizeText(col("text")))).as("tok"))
       .groupBy("lang", "tok").agg(count(lit(1)).as("cnt"))
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= 10)
       .orderBy("lang", "rk")
   }
 
-  private val corpusTopTokensSql = {
-    val norm =
-      """regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |      lower(text), '&amp;', '&', 'g'), '&nbsp;', ' ', 'g'),
-        |      '(?m)^\s*\d+\s*$', '', 'g'), '[ \t]+', ' ', 'g'), '\n{3,}', e'\n\n', 'g'),
-        |      '^\s+|\s+$', '', 'g')""".stripMargin
+  private val corpusTopTokensSql =
     s"""WITH toks AS (
-       |  SELECT lang, unnest(regexp_split_to_array($norm, '\\s+')) AS tok
+       |  SELECT lang, unnest(${wsTokensSql(normalizeTextSql("text"))}) AS tok
        |  FROM documents
        |), counts AS (
-       |  SELECT lang, tok, count(*) AS cnt FROM toks
-       |  WHERE length(tok) > 0
-       |  GROUP BY lang, tok
+       |  SELECT lang, tok, count(*) AS cnt FROM toks GROUP BY lang, tok
        |), ranked AS (
        |  SELECT lang, tok, cnt,
        |    CAST(row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, tok) AS BIGINT) AS rk
@@ -792,7 +766,6 @@ object Corpus {
        |)
        |SELECT lang, tok, cnt, rk FROM ranked WHERE rk <= 10
        |ORDER BY lang, rk""".stripMargin
-  }
 
   /** Heavy hitters via the custom SpaceSaving TypedImperativeAggregate
     * (functions/ApproxTopK) — same answer as corpus_top_tokens but computed
@@ -802,8 +775,7 @@ object Corpus {
   def corpusHeavyHitters(s: SparkSession, d: String): DataFrame = {
     import graft.functions.ApproxTopK.approxTopK
     Tables.documents(s, d)
-      .select(col("lang"), explode(split(normalizeText(col("text")), "\\s+")).as("tok"))
-      .filter(length(col("tok")) > 0)
+      .select(col("lang"), explode(wsTokens(normalizeText(col("text")))).as("tok"))
       .groupBy("lang")
       .agg(approxTopK(col("tok"), 10, 512).as("top"))
       .select(col("lang"), posexplode(col("top")).as(Seq("idx", "t")))
@@ -1466,12 +1438,12 @@ object Corpus {
        |  SELECT *, row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
        |  FROM documents WHERE n_chars > 50 AND length(lang) = 2
        |), built AS (
-       |  SELECT doc_id, lang, source, text, $normChainSql AS ntext
+       |  SELECT doc_id, lang, source, text, ${normalizeTextSql("text")} AS ntext
        |  FROM ranked WHERE rn = 1
        |), staged AS (
        |  SELECT doc_id, lang, source,
-       |    ${wcSql("text")} AS raw_wc,
-       |    ${wcSql("ntext")} AS norm_wc,
+       |    ${wordCountSql("text")} AS raw_wc,
+       |    ${wordCountSql("ntext")} AS norm_wc,
        |    ($amend) AS is_amendment,
        |    ($themes) AS n_themes
        |  FROM built
@@ -1504,8 +1476,7 @@ object Corpus {
   def corpusMixWeights(s: SparkSession, d: String): DataFrame = {
     val perSource = Tables.documents(s, d)
       .select(col("source"),
-        size(split(graft.functions.TextFunctions.wsTrim(col("text")), "\\s+"))
-          .cast("long").as("n_toks"))
+        wordCount(col("text")).as("n_toks"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("n_toks").as("n_tokens"))
     val totals = perSource.agg(sum("n_tokens").as("t_tok"),
@@ -1522,11 +1493,9 @@ object Corpus {
   }
 
   private val corpusMixWeightsSql =
-    """WITH per_source AS (
+    s"""WITH per_source AS (
       |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-      |    CAST(sum(array_length(regexp_split_to_array(
-      |      regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+'))) AS BIGINT)
-      |      AS n_tokens
+      |    CAST(sum(${wordCountSql("text")}) AS BIGINT) AS n_tokens
       |  FROM documents GROUP BY source
       |), totals AS (
       |  SELECT CAST(sum(n_tokens) AS BIGINT) AS t_tok,

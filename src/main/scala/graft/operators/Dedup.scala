@@ -68,15 +68,8 @@ object Dedup {
       else docs
     val toks = spread
       .select(col("doc_id"),
-        posexplode(split(normalizeText(col("text")), "\\s+")).as(Seq("pos", "tok")))
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    toks
-      .select(col("doc_id"), col("tok"),
-        lead("tok", 1).over(w).as("t1"), lead("tok", 2).over(w).as("t2"))
-      .filter(col("t2").isNotNull)
-      .select(col("doc_id"), concat_ws(" ", col("tok"), col("t1"), col("t2")).as("shingle"))
-      .distinct()
-      .cache()
+        posexplode(wsTokens(normalizeText(col("text")))).as(Seq("pos", "tok")))
+    kgrams(toks, 3, "shingle").distinct().cache()
   }
 
   /** 1-band MinHash LSH, fully SQL-expressible: bucket documents by the
@@ -108,46 +101,20 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  // Normalized-token-array CTE mirroring normalizeText(text) + split: the
-  // shared tokenizer for the shingle relation and the SimHash oracle.
-  private[operators] val toksCte =
-    """toks AS (
-      |  SELECT doc_id,
-      |    regexp_split_to_array(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-      |      regexp_replace(regexp_replace(lower(text), '&amp;', '&', 'g'),
-      |      '&nbsp;', ' ', 'g'), '(?m)^\s*\d+\s*$', '', 'g'), '[ \t]+', ' ', 'g'),
-      |      '\n{3,}', e'\n\n', 'g'), '^\s+|\s+$', '', 'g'), '\s+') AS t
-      |  FROM documents
-      |)""".stripMargin
+  // Oracle twin of wsTokens(normalizeText(text)) as a (doc_id, t) CTE — the
+  // token arrays of the shingle relation and the SimHash oracle.
+  private def toksCteOver(rel: String, sfx: String): String =
+    s"toks$sfx AS (SELECT doc_id, ${wsTokensSql(normalizeTextSql("text"))} AS t FROM $rel)"
+  private[operators] val toksCte = toksCteOver("documents", "")
 
-  // Shingle CTE mirrors wordShingles(normalizeText(text), 3): tokenize the
-  // normalized text, emit distinct 3-grams (1-based list indexing).
-  // Parameterized over the source relation + a CTE-name suffix so composed
-  // oracles (llm_pretrain_e2e) can shingle two different doc sets in one
-  // statement; the bare `shingleCte` keeps the historical documents form.
+  // Oracle twin of shinglesOf over any (doc_id, text) relation; the CTE-name
+  // suffix lets composed oracles (llm_pretrain_e2e) shingle two different
+  // doc sets in one statement.
   private[operators] def shingleCteOver(rel: String, sfx: String = ""): String =
-    s"""toks$sfx AS (
-      |  SELECT doc_id,
-      |    regexp_split_to_array(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-      |      regexp_replace(regexp_replace(lower(text), '&amp;', '&', 'g'),
-      |      '&nbsp;', ' ', 'g'), '(?m)^\\s*\\d+\\s*$$', '', 'g'), '[ \\t]+', ' ', 'g'),
-      |      '\\n{3,}', e'\\n\\n', 'g'), '^\\s+|\\s+$$', '', 'g'), '\\s+') AS t
-      |  FROM $rel
-      |), idx$sfx AS (
-      |  SELECT doc_id, t, unnest(generate_series(1, array_length(t) - 2)) AS i
-      |  FROM toks$sfx WHERE array_length(t) >= 3
-      |), sh$sfx AS (
-      |  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-      |  FROM idx$sfx
+    s"""${toksCteOver(rel, sfx)}, sh$sfx AS (
+      |  SELECT DISTINCT * FROM (${kgramsSql(s"toks$sfx", 3, "shingle")})
       |)""".stripMargin
-  private[operators] val shingleCte =
-    s"""$toksCte, idx AS (
-      |  SELECT doc_id, t, unnest(generate_series(1, array_length(t) - 2)) AS i
-      |  FROM toks WHERE array_length(t) >= 3
-      |), sh AS (
-      |  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-      |  FROM idx
-      |)""".stripMargin
+  private[operators] val shingleCte = shingleCteOver("documents")
 
   private val dedupMinhash1BandSql =
     s"""WITH $shingleCte,
@@ -405,7 +372,7 @@ object Dedup {
     // intermediate projection
     val toks = Tables.documents(s, d)
       .select(col("doc_id"),
-        explode(array_distinct(split(normalizeText(col("text")), "\\s+"))).as("tok"))
+        explode(array_distinct(wsTokens(normalizeText(col("text"))))).as("tok"))
       .select(col("doc_id"), md5(col("tok")).as("h"))
       .select(col("doc_id") +:
         (0 until 16).map(j =>
@@ -449,7 +416,7 @@ object Dedup {
     * this proves the pigeonhole blocking loses nothing. */
   private val dedupSimhashSql: String = {
     val nibbles = (0 until 16)
-      .map(j => s"strpos('0123456789abcdef', substr(h, ${j + 1}, 1)) - 1 AS n$j")
+      .map(j => s"${OracleSql.hexPrefix(s"substr(h, ${j + 1}, 1)", 1)} AS n$j")
       .mkString(", ")
     val votes = (0 until 64)
       .map(b => s"sum(CASE WHEN (n${b / 4} // ${1 << (b % 4)}) % 2 = 1 THEN 1 ELSE -1 END) AS v$b")
@@ -846,8 +813,7 @@ object Dedup {
        |  SELECT doc AS doc_id, min(lbl) AS cluster FROM reach GROUP BY doc
        |), qb AS (
        |  SELECT doc_id,
-       |    CASE WHEN length(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')) = 0 THEN 0
-       |         ELSE array_length(regexp_split_to_array(regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+')) END AS n_tokens,
+       |    ${wordCountSql("text")} AS n_tokens,
        |    length(text) AS len_chars,
        |    length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS n_alpha,
        |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct
@@ -1131,7 +1097,7 @@ object Dedup {
     * timestamp) threaded through to the output. */
   private def neardupVerified(docs: DataFrame, corpusIx: DataFrame,
       carry: Seq[String]): DataFrame = {
-    val toksArr = split(normalizeText(col("text")), "\\s+")
+    val toks = wsTokens(normalizeText(col("text")))
     // distinct 3-word shingles as an ARRAY column — the row-local form of
     // shinglesOf (docs with < 3 tokens have no shingles there and are
     // filtered here for the same reason). The shingle TRANSFORM stays a
@@ -1142,13 +1108,8 @@ object Dedup {
     // in ONE codegen'd pass with bit-exact xxhash64 parity, so the staged
     // corpus index still matches.
     val withSh = docs
-      .filter(size(toksArr) >= 3)
-      .withColumn("sh_arr", array_distinct(transform(
-        sequence(lit(0), size(toksArr) - lit(3)),
-        i => concat_ws(" ",
-          element_at(toksArr, i + lit(1)),
-          element_at(toksArr, i + lit(2)),
-          element_at(toksArr, i + lit(3))))))
+      .filter(size(toks) >= 3)
+      .withColumn("sh_arr", wordShingles(normalizeText(col("text")), 3))
       .withColumn("n_sh", size(col("sh_arr")).cast("long"))
       .withColumn("sig_arr",
         graft.functions.MinHashSig.minhashSig(col("sh_arr"), numHashes))
@@ -1651,9 +1612,7 @@ object Dedup {
   }
 
   private val dedupOverlapSketchSql = {
-    val hv = (0 until 15).map { j =>
-      s"(strpos('0123456789abcdef', substr(md5(shingle), ${j + 1}, 1)) - 1) * ${BigInt(16).pow(14 - j)}"
-    }.mkString("\n      + ")
+    val hv = OracleSql.hexPrefix("md5(shingle)", 15)
     s"""WITH $shingleCte,
        |sides AS (
        |  SELECT doc_id, CASE WHEN CAST(substring(source, 4) AS INT) % 2 = 0
@@ -2397,9 +2356,7 @@ object Dedup {
   }
 
   private val dedupSketchCalibrationSql = {
-    val hv = (0 until 15).map { j =>
-      s"(strpos('0123456789abcdef', substr(h, ${j + 1}, 1)) - 1) * ${BigInt(16).pow(14 - j)}"
-    }.mkString(" + ")
+    val hv = OracleSql.hexPrefix("h", 15)
     val sigSel = (0 until 16).map { i =>
       s"""min(CASE WHEN hk = $i THEN v END) AS h$i"""
     }.mkString(",\n    ")

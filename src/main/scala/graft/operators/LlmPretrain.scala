@@ -236,15 +236,11 @@ object LlmPretrain {
     * `text_contamination`, `corpus_mix_weights` + `corpus_token_budget`
     * and `text_pack_sequences`. */
   private val llmPretrainE2eSql = {
-    val wcText = {
-      val t = "regexp_replace(text, '^\\s+|\\s+$', '', 'g')"
-      s"CASE WHEN length($t) = 0 THEN 0 ELSE array_length(regexp_split_to_array($t, '\\s+')) END"
-    }
     s"""WITH intake AS (
        |  SELECT doc_id, lang, source, text FROM documents WHERE doc_id % 13 <> 0
        |), led0 AS (
        |  SELECT doc_id, lang, source, text,
-       |    CAST($wcText AS BIGINT) AS n_tokens,
+       |    CAST(${wordCountSql("text")} AS BIGINT) AS n_tokens,
        |    length(text) AS len_chars,
        |    length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS n_alpha,
        |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct,

@@ -659,10 +659,7 @@ object Multimodal {
 
   private val mmImageNeardupSql = {
     // 16-bit chunk c (hex chars 4c+1..4c+4) as an integer, nibble-decoded
-    def chunk(c: Int): String = (0 until 4).map { k =>
-      s"(strpos('0123456789abcdef', substr(phash, ${c * 4 + k + 1}, 1)) - 1)" +
-        s" * ${math.pow(16, 3 - k).toLong}"
-    }.mkString(" + ")
+    def chunk(c: Int): String = OracleSql.hexPrefix(s"substr(phash, ${c * 4 + 1}, 4)", 4)
     val ham = (0 until 4).map(c => s"bit_count(xor(a.c$c, b.c$c))").mkString(" + ")
     s"""$phashCteSql,
        |chunks AS (

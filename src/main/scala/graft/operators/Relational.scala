@@ -490,9 +490,7 @@ object Relational {
   }
 
   private val qApproxDistinctSql: String = {
-    val h = (0 until 15).map { j =>
-      s"(strpos('0123456789abcdef', substr(h0, ${j + 1}, 1)) - 1) * ${BigInt(16).pow(14 - j)}"
-    }.mkString(" + ")
+    val h = OracleSql.hexPrefix("h0", 15)
     s"""WITH hv AS (
        |  SELECT ship_year, $h AS h
        |  FROM (SELECT CAST(year(l_shipdate) AS BIGINT) AS ship_year,
@@ -561,9 +559,7 @@ object Relational {
   }
 
   private val qKmvDistinctSql: String = {
-    val v = (0 until 15).map { j =>
-      s"(strpos('0123456789abcdef', substr(h, ${j + 1}, 1)) - 1) * ${BigInt(16).pow(14 - j)}"
-    }.mkString(" + ")
+    val v = OracleSql.hexPrefix("h", 15)
     s"""WITH base AS (
        |  SELECT DISTINCT CAST(year(l_shipdate) AS BIGINT) AS ship_year, l_orderkey
        |  FROM lineitem
@@ -648,9 +644,7 @@ object Relational {
   }
 
   private val qKmvUnionSql: String = {
-    val v = (0 until 15).map { j =>
-      s"(strpos('0123456789abcdef', substr(h, ${j + 1}, 1)) - 1) * ${BigInt(16).pow(14 - j)}"
-    }.mkString(" + ")
+    val v = OracleSql.hexPrefix("h", 15)
     s"""WITH base AS (
        |  SELECT DISTINCT CAST(year(l_shipdate) AS BIGINT) AS ship_year, l_orderkey
        |  FROM lineitem

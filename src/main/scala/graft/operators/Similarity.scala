@@ -636,9 +636,7 @@ object Similarity {
     * cell probing, exact cosine rerank. Dim 64 and the md5-prefix sample
     * threshold are inlined; `// 2` halving is exact (power of two). */
   private val simAnnIvfSql: String = {
-    val hv = (0 until 15).map { j =>
-      s"(strpos('0123456789abcdef', substr(md5(CAST(vec_id AS VARCHAR)), ${j + 1}, 1)) - 1) * ${BigInt(16).pow(14 - j)}"
-    }.mkString(" + ")
+    val hv = OracleSql.hexPrefix("md5(CAST(vec_id AS VARCHAR))", 15)
     def iter(k: Int): String = {
       val prev = if (k == 1) "cent0" else s"cent${k - 1}"
       s"""a$k AS (

@@ -238,7 +238,6 @@ object Skew {
   }
 
   private val qJoinSizeEstimateSql: String = {
-    def nib(i: Int) = s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1)"
     s"""WITH k AS (
        |  SELECT CAST(user_id AS VARCHAR) AS k FROM events
        |), exact AS (
@@ -249,7 +248,7 @@ object Skew {
        |  SELECT j.j, md5('js' || j.j || ':' || k) AS h
        |  FROM k CROSS JOIN (VALUES (0), (1), (2), (3)) AS j(j)
        |), grid AS (
-       |  SELECT j, ${nib(1)} * 16 + ${nib(2)} AS b, CAST(count(*) AS BIGINT) AS c
+       |  SELECT j, ${OracleSql.hexPrefix("h", 2)} AS b, CAST(count(*) AS BIGINT) AS c
        |  FROM hashed GROUP BY 1, 2
        |), est AS (
        |  SELECT CAST(min(f2j) AS BIGINT) AS est_f2 FROM (

@@ -237,35 +237,36 @@ object StatTests {
         col("n_boot"))
   }
 
-  private val qBootstrapCiSql =
-    """WITH base AS (
-      |  SELECT l_orderkey, l_linenumber,
-      |    CAST(round(l_discount * 1000) AS BIGINT) AS v
-      |  FROM lineitem
-      |), pt AS (
-      |  SELECT CAST((1000000 * sum(v)) // count(*) AS BIGINT) AS point_micro
-      |  FROM base
-      |), fan AS (
-      |  SELECT v, b.b,
-      |    (strpos('0123456789abcdef', substr(md5('graft-boot-' ||
-      |      CAST(b.b AS VARCHAR) || ':' || CAST(l_orderkey AS VARCHAR) || '-'
-      |      || CAST(l_linenumber AS VARCHAR)), 1, 1)) - 1) % 4 AS m
-      |  FROM base CROSS JOIN (SELECT unnest(generate_series(1, 32)) AS b) b
-      |), wts AS (
-      |  SELECT v, b, CASE m WHEN 0 THEN 0 WHEN 3 THEN 2 ELSE 1 END AS w
-      |  FROM fan
-      |), rs AS (
-      |  SELECT b, CAST((1000000 * sum(w * v)) // sum(w) AS BIGINT) AS mean_micro
-      |  FROM wts GROUP BY b
-      |), rk AS (
-      |  SELECT mean_micro, row_number() OVER (ORDER BY mean_micro, b) AS rn
-      |  FROM rs
-      |)
-      |SELECT (SELECT point_micro FROM pt) AS point_micro,
-      |  CAST(min(CASE WHEN rn = 2 THEN mean_micro END) AS BIGINT) AS lo_micro,
-      |  CAST(min(CASE WHEN rn = 31 THEN mean_micro END) AS BIGINT) AS hi_micro,
-      |  CAST(count(*) AS BIGINT) AS n_boot
-      |FROM rk""".stripMargin
+  private val qBootstrapCiSql = {
+    val bootHash = "md5('graft-boot-' || CAST(b.b AS VARCHAR) || ':' || " +
+      "CAST(l_orderkey AS VARCHAR) || '-' || CAST(l_linenumber AS VARCHAR))"
+    s"""WITH base AS (
+       |  SELECT l_orderkey, l_linenumber,
+       |    CAST(round(l_discount * 1000) AS BIGINT) AS v
+       |  FROM lineitem
+       |), pt AS (
+       |  SELECT CAST((1000000 * sum(v)) // count(*) AS BIGINT) AS point_micro
+       |  FROM base
+       |), fan AS (
+       |  SELECT v, b.b,
+       |    ${OracleSql.hexPrefix(bootHash, 1)} % 4 AS m
+       |  FROM base CROSS JOIN (SELECT unnest(generate_series(1, 32)) AS b) b
+       |), wts AS (
+       |  SELECT v, b, CASE m WHEN 0 THEN 0 WHEN 3 THEN 2 ELSE 1 END AS w
+       |  FROM fan
+       |), rs AS (
+       |  SELECT b, CAST((1000000 * sum(w * v)) // sum(w) AS BIGINT) AS mean_micro
+       |  FROM wts GROUP BY b
+       |), rk AS (
+       |  SELECT mean_micro, row_number() OVER (ORDER BY mean_micro, b) AS rn
+       |  FROM rs
+       |)
+       |SELECT (SELECT point_micro FROM pt) AS point_micro,
+       |  CAST(min(CASE WHEN rn = 2 THEN mean_micro END) AS BIGINT) AS lo_micro,
+       |  CAST(min(CASE WHEN rn = 31 THEN mean_micro END) AS BIGINT) AS hi_micro,
+       |  CAST(count(*) AS BIGINT) AS n_boot
+       |FROM rk""".stripMargin
+  }
 
   // ---------------------------------------------------------------------
   // q_cuped — CUPED variance reduction (Deng et al., WSDM'13): adjust the

@@ -47,12 +47,11 @@ object TextAnalysis {
   }
 
   private val textTokenStatsSql =
-    """WITH b AS (
+    s"""WITH b AS (
       |  SELECT doc_id,
-      |    CASE WHEN length(regexp_replace(text, '^\s+|\s+$', '', 'g')) = 0 THEN 0
-      |         ELSE array_length(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) END AS n_tokens,
+      |    ${wordCountSql("text")} AS n_tokens,
       |    length(text) AS len_chars,
-      |    length(regexp_replace(text, '\s', '', 'g')) AS n_nonspace,
+      |    length(regexp_replace(text, '\\s', '', 'g')) AS n_nonspace,
       |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct
       |  FROM documents
       |)
@@ -140,10 +139,9 @@ object TextAnalysis {
   }
 
   private val textQualityTercileSql =
-    """WITH b AS (
+    s"""WITH b AS (
       |  SELECT doc_id,
-      |    CASE WHEN length(regexp_replace(text, '^\s+|\s+$', '', 'g')) = 0 THEN 0
-      |         ELSE array_length(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) END AS n_tokens,
+      |    ${wordCountSql("text")} AS n_tokens,
       |    length(text) AS len_chars,
       |    length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS n_alpha,
       |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct
@@ -220,10 +218,9 @@ object TextAnalysis {
   }
 
   private val textQualityAucSql =
-    """WITH b AS (
+    s"""WITH b AS (
       |  SELECT doc_id, lang,
-      |    CASE WHEN length(regexp_replace(text, '^\s+|\s+$', '', 'g')) = 0 THEN 0
-      |         ELSE array_length(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) END AS n_tokens,
+      |    ${wordCountSql("text")} AS n_tokens,
       |    length(text) AS len_chars,
       |    length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS n_alpha,
       |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct
@@ -265,10 +262,9 @@ object TextAnalysis {
       |FROM agg ORDER BY lang""".stripMargin
 
   private val textQualitySql =
-    """WITH b AS (
+    s"""WITH b AS (
       |  SELECT doc_id,
-      |    CASE WHEN length(regexp_replace(text, '^\s+|\s+$', '', 'g')) = 0 THEN 0
-      |         ELSE array_length(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) END AS n_tokens,
+      |    ${wordCountSql("text")} AS n_tokens,
       |    length(text) AS len_chars,
       |    length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS n_alpha,
       |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct
@@ -497,12 +493,8 @@ object TextAnalysis {
         expr("(20000 * (n_lines - n_distinct) + n_lines) div (2 * n_lines)")
           .cast("double") / 10000.0)
     val toks = doc.select(col("doc_id"),
-      posexplode(split(normalizeText(col("text")), "\\s+")).as(Seq("pos", "tok")))
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val bigrams = toks
-      .select(col("doc_id"), col("tok"), lead("tok", 1).over(w).as("t1"))
-      .filter(col("t1").isNotNull)
-      .select(col("doc_id"), concat_ws(" ", col("tok"), col("t1")).as("bg"))
+      posexplode(wsTokens(normalizeText(col("text")))).as(Seq("pos", "tok")))
+    val bigrams = kgrams(toks, 2, "bg")
       .groupBy("doc_id", "bg").agg(count(lit(1)).as("cnt"))
     val rk = Window.partitionBy("doc_id").orderBy(col("cnt").desc, col("bg").asc)
     val top = bigrams
@@ -519,23 +511,14 @@ object TextAnalysis {
   }
 
   private val textRepetitionSql =
-    """WITH l AS (
-      |  SELECT doc_id, unnest(regexp_split_to_array(text, '\n')) AS line
+    s"""WITH l AS (
+      |  SELECT doc_id, unnest(regexp_split_to_array(text, '\\n')) AS line
       |  FROM documents
       |), lines AS (
       |  SELECT doc_id, count(*) AS n_lines, count(DISTINCT line) AS n_distinct
       |  FROM l GROUP BY doc_id
-      |), toks AS (
-      |  SELECT doc_id,
-      |    regexp_split_to_array(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-      |      regexp_replace(regexp_replace(lower(text), '&amp;', '&', 'g'),
-      |      '&nbsp;', ' ', 'g'), '(?m)^\s*\d+\s*$', '', 'g'), '[ \t]+', ' ', 'g'),
-      |      '\n{3,}', e'\n\n', 'g'), '^\s+|\s+$', '', 'g'), '\s+') AS t
-      |  FROM documents
-      |), bg AS (
-      |  SELECT doc_id, t[i] || ' ' || t[i+1] AS bg
-      |  FROM (SELECT doc_id, t, unnest(generate_series(1, array_length(t) - 1)) AS i
-      |        FROM toks WHERE array_length(t) >= 2)
+      |), ${Dedup.toksCte}, bg AS (
+      |  ${kgramsSql("toks", 2, "bg")}
       |), cnts AS (
       |  SELECT doc_id, bg, count(*) AS cnt FROM bg GROUP BY doc_id, bg
       |), top AS (
@@ -612,10 +595,9 @@ object TextAnalysis {
   }
 
   private val textPackSequencesSql =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT lang, doc_id,
-      |    CASE WHEN length(regexp_replace(text, '^\s+|\s+$', '', 'g')) = 0 THEN 0
-      |         ELSE array_length(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) END AS n_tokens
+      |    ${wordCountSql("text")} AS n_tokens
       |  FROM documents
       |), c AS (
       |  SELECT lang, doc_id, n_tokens,
@@ -680,8 +662,7 @@ object TextAnalysis {
   private val textFilterChainSql =
     s"""WITH b AS (
       |  SELECT doc_id,
-      |    CASE WHEN length(regexp_replace(text, '^\\s+|\\s+$$', '', 'g')) = 0 THEN 0
-      |         ELSE array_length(regexp_split_to_array(regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+')) END AS n_tokens,
+      |    ${wordCountSql("text")} AS n_tokens,
       |    length(text) AS len_chars,
       |    length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS n_alpha,
       |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct,
@@ -715,11 +696,10 @@ object TextAnalysis {
   }
 
   private val textBpeTokenCountSql =
-    """WITH b AS (
+    s"""WITH b AS (
       |  SELECT doc_id,
-      |    CASE WHEN length(regexp_replace(text, '^\s+|\s+$', '', 'g')) = 0 THEN 0
-      |         ELSE array_length(regexp_split_to_array(regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) END AS n_ws_tokens,
-      |    CAST(array_length(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\s]+')) AS BIGINT) AS n_bpe_tokens
+      |    ${wordCountSql("text")} AS n_ws_tokens,
+      |    CAST(array_length(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\\s]+')) AS BIGINT) AS n_bpe_tokens
       |  FROM documents
       |)
       |SELECT doc_id, n_ws_tokens, n_bpe_tokens,
@@ -743,8 +723,7 @@ object TextAnalysis {
     * a centinat rounding (it sits ~13 orders of magnitude from a boundary). */
   def textUnigramLogprob(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
-      .select(col("doc_id"), explode(split(wsTrim(col("text")), "\\s+")).as("tok"))
-      .filter(length(col("tok")) > 0)
+      .select(col("doc_id"), explode(wsTokens(col("text"))).as("tok"))
     val dfs = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
     val total = dfs.agg(sum("cnt").as("tot"))
     val scored = dfs.crossJoin(total)
@@ -758,12 +737,8 @@ object TextAnalysis {
   }
 
   private val textUnigramLogprobSql =
-    """WITH toks AS (
-      |  SELECT doc_id, unnest(regexp_split_to_array(
-      |    regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS tok
-      |  FROM documents
-      |), t2 AS (
-      |  SELECT doc_id, tok FROM toks WHERE length(tok) > 0
+    s"""WITH t2 AS (
+      |  SELECT doc_id, unnest(${wsTokensSql("text")}) AS tok FROM documents
       |), dfs AS (
       |  SELECT tok, count(*) AS cnt FROM t2 GROUP BY tok
       |), tot AS (
@@ -795,8 +770,7 @@ object TextAnalysis {
   def textBigramLogprob(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
       .select(col("doc_id"),
-        posexplode(split(wsTrim(col("text")), "\\s+")).as(Seq("pos", "tok")))
-      .filter(length(col("tok")) > 0)
+        posexplode(wsTokens(col("text"))).as(Seq("pos", "tok")))
       .cache()
     val w = Window.partitionBy("doc_id").orderBy("pos")
     // cached: the bigram window (a doc_id shuffle + sort) feeds BOTH count
@@ -824,15 +798,13 @@ object TextAnalysis {
   }
 
   private val textBigramLogprobSql =
-    """WITH raw AS (
-      |  SELECT doc_id, regexp_split_to_array(
-      |    regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS t
+    s"""WITH raw AS (
+      |  SELECT doc_id, ${wsTokensSql("text")} AS t
       |  FROM documents
       |), tk AS (
       |  SELECT doc_id, i, t[i] AS tok
       |  FROM (SELECT doc_id, t, unnest(generate_series(1, array_length(t))) AS i
       |        FROM raw)
-      |  WHERE length(t[i]) > 0
       |), bg AS (
       |  SELECT doc_id, w1, w2 FROM (
       |    SELECT doc_id, tok AS w1,
@@ -881,8 +853,7 @@ object TextAnalysis {
   def textSpanCorruption(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
       .select(col("doc_id"),
-        posexplode(split(wsTrim(col("text")), "\\s+")).as(Seq("pos", "tok")))
-      .filter(length(col("tok")) > 0)
+        posexplode(wsTokens(col("text"))).as(Seq("pos", "tok")))
       .cache()
     val meta = toks.groupBy("doc_id").agg(count(lit(1)).as("n"))
       .withColumn("n_spans", greatest(lit(1L), expr("n div 20")))
@@ -913,16 +884,13 @@ object TextAnalysis {
   }
 
   private val textSpanCorruptionSql = {
-    def nib(i: Int) = s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1)"
     s"""WITH raw AS (
-       |  SELECT doc_id, regexp_split_to_array(
-       |    regexp_replace(text, '^\\s+|\\s+$$', '', 'g'), '\\s+') AS t
+       |  SELECT doc_id, ${wsTokensSql("text")} AS t
        |  FROM documents
        |), tk AS (
        |  SELECT doc_id, i - 1 AS pos, t[i] AS tok
        |  FROM (SELECT doc_id, t, unnest(generate_series(1, array_length(t))) AS i
        |        FROM raw)
-       |  WHERE length(t[i]) > 0
        |), meta AS (
        |  SELECT doc_id, count(*) AS n,
        |    GREATEST(1, count(*) // 20) AS n_spans,
@@ -939,8 +907,7 @@ object TextAnalysis {
        |  SELECT doc_id, n, n_spans, stride, k,
        |    k * stride + off AS start, LEAST(3, stride - off) AS len
        |  FROM (SELECT doc_id, n, n_spans, stride, k,
-       |          (${nib(1)} * 4096 + ${nib(2)} * 256 + ${nib(3)} * 16
-       |           + ${nib(4)}) % stride AS off
+       |          ${OracleSql.hexPrefix("h", 4)} % stride AS off
        |        FROM hashed)
        |), masked AS (
        |  SELECT tk.doc_id, count(*) AS n_masked_tokens,
@@ -1092,14 +1059,10 @@ object TextAnalysis {
   private[graft] def textDsirScores(s: SparkSession, d: String): DataFrame = {
     val doc = Tables.documents(s, d)
     val toks = doc.select(col("doc_id"),
-      posexplode(split(normalizeText(col("text")), "\\s+")).as(Seq("pos", "tok")))
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val feats = toks
-      .select(col("doc_id"), col("tok"), lead("tok", 1).over(w).as("t1"))
-      .filter(col("t1").isNotNull)
+      posexplode(wsTokens(normalizeText(col("text")))).as(Seq("pos", "tok")))
+    val feats = kgrams(toks, 2, "bg")
       .select(col("doc_id"),
-        conv(substring(md5(concat_ws(" ", col("tok"), col("t1"))), 1, 4), 16, 10)
-          .cast("long").as("b"),
+        conv(substring(md5(col("bg")), 1, 4), 16, 10).cast("long").as("b"),
         (pmod(col("doc_id"), lit(100)) === 0).as("is_target"))
       .cache()
     val counts = feats.groupBy("b").agg(
@@ -1117,12 +1080,9 @@ object TextAnalysis {
   }
 
   private val textDsirWeightSql: String = {
-    def nib(i: Int) = s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1)"
-    val bucket = s"${nib(1)} * 4096 + ${nib(2)} * 256 + ${nib(3)} * 16 + ${nib(4)}"
+    val bucket = OracleSql.hexPrefix("h", 4)
     s"""WITH ${Dedup.toksCte}, bg AS (
-       |  SELECT doc_id, md5(t[i] || ' ' || t[i+1]) AS h
-       |  FROM (SELECT doc_id, t, unnest(generate_series(1, array_length(t) - 1)) AS i
-       |        FROM toks WHERE array_length(t) >= 2)
+       |  SELECT doc_id, md5(bg) AS h FROM (${kgramsSql("toks", 2, "bg")})
        |), feats AS (
        |  SELECT doc_id, $bucket AS b, doc_id % 100 = 0 AS is_target FROM bg
        |), counts AS (
@@ -1169,7 +1129,7 @@ object TextAnalysis {
   def textPmiCollocations(s: SparkSession, d: String): DataFrame = {
     val doc = Tables.documents(s, d)
     val toks = doc.select(col("doc_id"),
-        posexplode(split(normalizeText(col("text")), "\\s+")).as(Seq("pos", "tok")))
+        posexplode(wsTokens(normalizeText(col("text")))).as(Seq("pos", "tok")))
       .cache()
     // cached: the unigram table is consumed by the totals row and BOTH
     // sides of the scoring join
@@ -1241,7 +1201,7 @@ object TextAnalysis {
   def textCooccurrence(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
       .select(col("doc_id"),
-        posexplode(split(normalizeText(col("text")), "\\s+")).as(Seq("pos", "tok")))
+        posexplode(wsTokens(normalizeText(col("text")))).as(Seq("pos", "tok")))
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val pairs = toks
       .select(col("tok"),
@@ -1293,7 +1253,7 @@ object TextAnalysis {
   def textCmsFreq(s: SparkSession, d: String): DataFrame = {
     val depth = 4
     val toks = Tables.documents(s, d)
-      .select(explode(split(normalizeText(col("text")), "\\s+")).as("tok"))
+      .select(explode(wsTokens(normalizeText(col("text")))).as("tok"))
       .cache() // consumed by the exact counts AND the sketch grid
     def bucket(j: Int, tok: Column): Column =
       conv(substring(md5(concat(lit(s"cms$j:"), tok)), 1, 2), 16, 10).cast("long")
@@ -1322,7 +1282,6 @@ object TextAnalysis {
   }
 
   private val textCmsFreqSql: String = {
-    def nib(i: Int) = s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1)"
     s"""WITH ${Dedup.toksCte}, tok AS (
        |  SELECT unnest(t) AS tok FROM toks
        |), exact AS (
@@ -1336,7 +1295,7 @@ object TextAnalysis {
        |  SELECT tok, j.j, md5('cms' || j.j || ':' || tok) AS h
        |  FROM tok CROSS JOIN (VALUES (0), (1), (2), (3)) AS j(j)
        |), grid AS (
-       |  SELECT j, ${nib(1)} * 16 + ${nib(2)} AS b, CAST(count(*) AS BIGINT) AS c
+       |  SELECT j, ${OracleSql.hexPrefix("h", 2)} AS b, CAST(count(*) AS BIGINT) AS c
        |  FROM hashed GROUP BY 1, 2
        |), probe_cells AS (
        |  SELECT p.rk, p.tok, p.exact_c, j.j,
@@ -1345,7 +1304,7 @@ object TextAnalysis {
        |), est AS (
        |  SELECT rk, tok, exact_c, min(c) AS est_c
        |  FROM probe_cells pc JOIN grid g
-       |    ON pc.j = g.j AND ${nib(1)} * 16 + ${nib(2)} = g.b
+       |    ON pc.j = g.j AND ${OracleSql.hexPrefix("h", 2)} = g.b
        |  GROUP BY rk, tok, exact_c
        |)
        |SELECT rk, tok, exact_c, est_c,
@@ -1373,13 +1332,9 @@ object TextAnalysis {
   def textNgramEntropy(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
       .select(col("doc_id"),
-        posexplode(split(normalizeText(col("text")), "\\s+")).as(Seq("pos", "tok")))
-    val w = Window.partitionBy("doc_id").orderBy("pos")
+        posexplode(wsTokens(normalizeText(col("text")))).as(Seq("pos", "tok")))
     val uni = toks.select(col("tok").as("gram"))
-    val bi = toks
-      .select(col("doc_id"), col("tok"), lead("tok", 1).over(w).as("t1"))
-      .filter(col("t1").isNotNull)
-      .select(concat_ws(" ", col("tok"), col("t1")).as("gram"))
+    val bi = kgrams(toks, 2, "gram").select("gram")
     def ent(grams: DataFrame, n: Long): DataFrame =
       grams.groupBy("gram").agg(count(lit(1)).as("c"))
         .agg(count(lit(1)).as("n_distinct"), sum("c").as("total"),
@@ -1398,11 +1353,8 @@ object TextAnalysis {
   private val textNgramEntropySql =
     s"""WITH ${Dedup.toksCte}, uni AS (
        |  SELECT unnest(t) AS gram FROM toks
-       |), idx AS (
-       |  SELECT t, unnest(generate_series(1, array_length(t) - 1)) AS i
-       |  FROM toks WHERE array_length(t) >= 2
        |), bi AS (
-       |  SELECT t[i] || ' ' || t[i+1] AS gram FROM idx
+       |  SELECT gram FROM (${kgramsSql("toks", 2, "gram")})
        |), e1 AS (
        |  SELECT CAST(1 AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS n_distinct,
        |    CAST(sum(c) AS BIGINT) AS total,
@@ -1445,7 +1397,7 @@ object TextAnalysis {
     * the rewrite) — the one genuine scale hazard the r5 plan audit found. */
   def textZipfFit(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
-      .select(explode(split(normalizeText(col("text")), "\\s+")).as("tok"))
+      .select(explode(wsTokens(normalizeText(col("text")))).as("tok"))
     val freq = toks.groupBy("tok").agg(count(lit(1)).as("c"))
     val w = Window.orderBy(col("c").desc, col("tok").asc)
     // regression over the top-1000 ranks only: the freq-1 tail is tie-noise
@@ -1511,7 +1463,7 @@ object TextAnalysis {
   def textFeatureHashing(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
       .select(col("doc_id"),
-        explode(split(normalizeText(col("text")), "\\s+")).as("tok"))
+        explode(wsTokens(normalizeText(col("text")))).as("tok"))
       .withColumn("h", md5(col("tok")))
       .select(col("doc_id"),
         pmod(conv(substring(col("h"), 1, 2), 16, 10).cast("long"), lit(64L)).as("dim"),
@@ -1535,9 +1487,8 @@ object TextAnalysis {
        |  SELECT doc_id, md5(unnest(t)) AS h FROM toks
        |), feats AS (
        |  SELECT doc_id,
-       |    (strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 16 +
-       |    (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) AS raw,
-       |    CASE WHEN strpos('0123456789abcdef', substr(h, 3, 1)) - 1 < 8
+       |    ${OracleSql.hexPrefix("h", 2)} AS raw,
+       |    CASE WHEN ${OracleSql.hexPrefix("substr(h, 3, 1)", 1)} < 8
        |         THEN 1 ELSE -1 END AS sgn
        |  FROM tok
        |), dims AS (
@@ -1565,7 +1516,7 @@ object TextAnalysis {
   def textTypeTokenRatio(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
       .select(col("doc_id"),
-        explode(split(normalizeText(col("text")), "\\s+")).as("tok"))
+        explode(wsTokens(normalizeText(col("text")))).as("tok"))
     toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
       .groupBy("doc_id")
       .agg(sum("c").as("n_tokens"),
@@ -1619,12 +1570,12 @@ object TextAnalysis {
   }
 
   private val textSentenceSplitSql =
-    """WITH sents AS (
+    s"""WITH raw AS (
       |  SELECT doc_id,
-      |    regexp_replace(
-      |      unnest(regexp_split_to_array(replace(text, ' the ', '. '), '[.!?]+')),
-      |      '^\s+|\s+$', '', 'g') AS sent
+      |    unnest(regexp_split_to_array(replace(text, ' the ', '. '), '[.!?]+')) AS raw_sent
       |  FROM documents
+      |), sents AS (
+      |  SELECT doc_id, ${wsTrimSql("raw_sent")} AS sent FROM raw
       |)
       |SELECT doc_id,
       |  count(*) AS n_sentences,
@@ -1665,8 +1616,7 @@ object TextAnalysis {
   private[graft] def nbClassifierOn(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id"), col("lang"),
-        explode(split(wsTrim(col("text")), "\\s+")).as("tok"))
-      .filter(length(col("tok")) > 0)
+        explode(wsTokens(col("text"))).as("tok"))
     val train = toks.filter(col("doc_id") % 2 === 0)
     val test = toks.filter(col("doc_id") % 2 === 1)
 
@@ -1703,12 +1653,8 @@ object TextAnalysis {
   }
 
   private val textNbClassifierSql =
-    """WITH toks AS (
-      |  SELECT doc_id, lang, unnest(regexp_split_to_array(
-      |    regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS tok
-      |  FROM documents
-      |), t2 AS (
-      |  SELECT doc_id, lang, tok FROM toks WHERE length(tok) > 0
+    s"""WITH t2 AS (
+      |  SELECT doc_id, lang, unnest(${wsTokensSql("text")}) AS tok FROM documents
       |), train AS (
       |  SELECT * FROM t2 WHERE doc_id % 2 = 0
       |), test AS (
@@ -1782,8 +1728,7 @@ object TextAnalysis {
   def textBackoffLm(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
       .select(col("doc_id"),
-        posexplode(split(wsTrim(col("text")), "\\s+")).as(Seq("pos", "tok")))
-      .filter(length(col("tok")) > 0)
+        posexplode(wsTokens(col("text"))).as(Seq("pos", "tok")))
     val train = toks.filter(col("doc_id") % 2 === 0)
     val w = Window.partitionBy("doc_id").orderBy("pos")
     def grams(rel: DataFrame): DataFrame = rel
@@ -1834,15 +1779,13 @@ object TextAnalysis {
   }
 
   private val textBackoffLmSql =
-    """WITH raw AS (
-      |  SELECT doc_id, regexp_split_to_array(
-      |    regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS t
+    s"""WITH raw AS (
+      |  SELECT doc_id, ${wsTokensSql("text")} AS t
       |  FROM documents
       |), tk AS (
       |  SELECT doc_id, i, t[i] AS tok
       |  FROM (SELECT doc_id, t, unnest(generate_series(1, array_length(t))) AS i
       |        FROM raw)
-      |  WHERE length(t[i]) > 0
       |), gr AS (
       |  SELECT doc_id, tok AS w1,
       |    lead(tok, 1) OVER (PARTITION BY doc_id ORDER BY i) AS w2,
@@ -1913,8 +1856,7 @@ object TextAnalysis {
       "on", "at", "by", "with")
     val toks = Tables.documents(s, d)
       .select(col("doc_id"),
-        posexplode(split(wsTrim(col("text")), "\\s+")).as(Seq("pos", "tok")))
-      .filter(length(col("tok")) > 0)
+        posexplode(wsTokens(col("text"))).as(Seq("pos", "tok")))
     val nonstop = toks.filter(!col("tok").isInCollection(stops))
       .withColumn("rn",
         row_number().over(Window.partitionBy("doc_id").orderBy("pos")))
@@ -1947,15 +1889,13 @@ object TextAnalysis {
   }
 
   private val textRakeSql =
-    """WITH raw AS (
-      |  SELECT doc_id, regexp_split_to_array(
-      |    regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS t
+    s"""WITH raw AS (
+      |  SELECT doc_id, ${wsTokensSql("text")} AS t
       |  FROM documents
       |), tk AS (
       |  SELECT doc_id, i, t[i] AS tok
       |  FROM (SELECT doc_id, t, unnest(generate_series(1, array_length(t))) AS i
       |        FROM raw)
-      |  WHERE length(t[i]) > 0
       |), ns AS (
       |  SELECT doc_id, i, tok,
       |    i - row_number() OVER (PARTITION BY doc_id ORDER BY i) AS grp
@@ -2004,8 +1944,7 @@ object TextAnalysis {
   def textTfidfTop(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
       .select(col("doc_id"),
-        explode(split(wsTrim(col("text")), "\\s+")).as("tok"))
-      .filter(length(col("tok")) > 0)
+        explode(wsTokens(col("text"))).as("tok"))
     val tf = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")).cache()
     val df = tf.groupBy("tok").agg(count(lit(1)).as("df"))
     val n = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
@@ -2025,13 +1964,12 @@ object TextAnalysis {
   }
 
   private val textTfidfTopSql =
-    """WITH toks AS (
-      |  SELECT doc_id, unnest(regexp_split_to_array(
-      |    regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS tok
+    s"""WITH toks AS (
+      |  SELECT doc_id, unnest(${wsTokensSql("text")}) AS tok
       |  FROM documents
       |), tf AS (
       |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-      |  FROM toks WHERE length(tok) > 0 GROUP BY doc_id, tok
+      |  FROM toks GROUP BY doc_id, tok
       |), df AS (
       |  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY tok
       |), n AS (
@@ -2063,15 +2001,8 @@ object TextAnalysis {
   def textNovelty(s: SparkSession, d: String): DataFrame = {
     val toks = Tables.documents(s, d)
       .select(col("doc_id"),
-        posexplode(split(normalizeText(col("text")), "\\s+")).as(Seq("pos", "tok")))
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val ngrams = toks
-      .select(col("doc_id"),
-        col("tok"), lead("tok", 1).over(w).as("t2"), lead("tok", 2).over(w).as("t3"))
-      .filter(col("t3").isNotNull)
-      .select(col("doc_id"),
-        concat_ws(" ", col("tok"), col("t2"), col("t3")).as("ng"))
-      .distinct()
+        posexplode(wsTokens(normalizeText(col("text")))).as(Seq("pos", "tok")))
+    val ngrams = kgrams(toks, 3, "ng").distinct()
     val first = ngrams.groupBy("ng").agg(min("doc_id").as("first_doc"))
     ngrams.join(first, Seq("ng"))
       .groupBy("doc_id")
@@ -2082,12 +2013,8 @@ object TextAnalysis {
   }
 
   private val textNoveltySql =
-    s"""WITH ${Dedup.toksCte}, idx AS (
-       |  SELECT doc_id, t, unnest(generate_series(1, array_length(t) - 2)) AS i
-       |  FROM toks WHERE array_length(t) >= 3
-       |), ngr AS (
-       |  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS ng
-       |  FROM idx
+    s"""WITH ${Dedup.toksCte}, ngr AS (
+       |  SELECT DISTINCT * FROM (${kgramsSql("toks", 3, "ng")})
        |), fst AS (
        |  SELECT ng, min(doc_id) AS first_doc FROM ngr GROUP BY ng
        |)
@@ -2222,8 +2149,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("nd")))
     val toks = Tables.documents(s, d).crossJoin(nDocs)
       .select(expr(s"(doc_id * $nb) div nd").as("bucket"),
-        explode(split(col("text"), "\\s+")).as("tok"))
-      .filter(length(col("tok")) > 0)
+        explode(wsTokens(col("text"))).as("tok"))
       .cache()
     val tb = toks.groupBy("bucket").agg(count(lit(1)).as("t_b"))
     val vb = toks.groupBy("tok").agg(min("bucket").as("bucket"))
@@ -2256,13 +2182,11 @@ object TextAnalysis {
   }
 
   private val textHeapsLawSql =
-    """WITH nd AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM documents
+    s"""WITH nd AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM documents
       |), toks AS (
       |  SELECT (d.doc_id * 64) // n.nd AS bucket, t.tok
       |  FROM documents d CROSS JOIN nd n,
-      |    LATERAL (SELECT unnest(regexp_split_to_array(d.text, '\s+'))
-      |             AS tok) t
-      |  WHERE length(t.tok) > 0
+      |    LATERAL (SELECT unnest(${wsTokensSql("d.text")}) AS tok) t
       |), tb AS (
       |  SELECT bucket, CAST(count(*) AS BIGINT) AS t_b FROM toks
       |  GROUP BY bucket
@@ -2334,8 +2258,7 @@ object TextAnalysis {
     val K = 10
     val toks = docs
       .select(col("doc_id"),
-        posexplode(split(wsTrim(col("text")), "\\s+")).as(Seq("pos", "tok")))
-      .filter(length(col("tok")) > 0)
+        posexplode(wsTokens(col("text"))).as(Seq("pos", "tok")))
     val lines = toks
       .select(col("doc_id"), expr(s"CAST(pos div $K AS BIGINT)").as("ci"),
         col("pos"), col("tok"))
@@ -2375,15 +2298,13 @@ object TextAnalysis {
   }
 
   private val textDedupLinesSql =
-    """WITH raw AS (
-      |  SELECT doc_id, regexp_split_to_array(
-      |    regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS t
+    s"""WITH raw AS (
+      |  SELECT doc_id, ${wsTokensSql("text")} AS t
       |  FROM documents
       |), tk AS (
       |  SELECT doc_id, i - 1 AS pos, t[i] AS tok
       |  FROM (SELECT doc_id, t, unnest(generate_series(1, array_length(t)))
       |          AS i FROM raw)
-      |  WHERE length(t[i]) > 0
       |), lines AS (
       |  SELECT doc_id, pos // 10 AS ci, string_agg(tok, ' ' ORDER BY pos)
       |    AS line
@@ -2440,8 +2361,7 @@ object TextAnalysis {
     val C = 64; val S = 48
     val toks = docs
       .select(col("doc_id"),
-        posexplode(split(wsTrim(col("text")), "\\s+")).as(Seq("pos", "tok")))
-      .filter(length(col("tok")) > 0)
+        posexplode(wsTokens(col("text"))).as(Seq("pos", "tok")))
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val tk = toks
       .select(col("doc_id"),
@@ -2467,15 +2387,13 @@ object TextAnalysis {
   }
 
   private val textChunkOverlapSql =
-    """WITH raw AS (
-      |  SELECT doc_id, regexp_split_to_array(
-      |    regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+') AS t
+    s"""WITH raw AS (
+      |  SELECT doc_id, ${wsTokensSql("text")} AS t
       |  FROM documents
       |), tk0 AS (
       |  SELECT doc_id, i, t[i] AS tok
       |  FROM (SELECT doc_id, t, unnest(generate_series(1, array_length(t)))
       |          AS i FROM raw)
-      |  WHERE length(t[i]) > 0
       |), tk AS (
       |  SELECT doc_id, row_number() OVER (PARTITION BY doc_id ORDER BY i) - 1
       |    AS p, tok

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.functions.TextFunctions.{wsTokens, wsTokensSql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,9 +63,7 @@ object UnigramLm {
     * over the same type relation). */
   private def wordCounts(docs: DataFrame): DataFrame =
     docs
-      .select(explode(split(graft.functions.TextFunctions.wsTrim(col("text")),
-        "\\s+")).as("word"))
-      .filter(length(col("word")) > 0)
+      .select(explode(wsTokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
 
   /** q(x) = round(1000·ln(x)) — quantized milli-nats over integer counts. */
@@ -202,9 +201,7 @@ object UnigramLm {
     val wordTok = seg2.select(col("word"), size(col("pieces")).cast("long").as("m"))
     val docToks = docs
       .select(col("doc_id"),
-        explode(split(graft.functions.TextFunctions.wsTrim(col("text")),
-          "\\s+")).as("word"))
-      .filter(length(col("word")) > 0)
+        explode(wsTokens(col("text"))).as("word"))
     docToks.join(wordTok, "word")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"),
@@ -225,13 +222,10 @@ object UnigramLm {
   // ---------------------------------------------------------------------
 
   private val preludeSql: String =
-    """dtoks AS (
-      |  SELECT doc_id, unnest(regexp_split_to_array(
-      |    regexp_replace(text, '^\s+|\s+$', '', 'g'), '\s+')) AS word
-      |  FROM documents
+    s"""dtoks AS (
+      |  SELECT doc_id, unnest(${wsTokensSql("text")}) AS word FROM documents
       |), wc AS (
-      |  SELECT word, CAST(count(*) AS BIGINT) AS freq FROM dtoks
-      |  WHERE length(word) > 0 GROUP BY word
+      |  SELECT word, CAST(count(*) AS BIGINT) AS freq FROM dtoks GROUP BY word
       |), pos1 AS (
       |  SELECT word, freq, unnest(generate_series(1, length(word))) AS i
       |  FROM wc

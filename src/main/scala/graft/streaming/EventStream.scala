@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.OracleSql
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -915,9 +916,7 @@ object EventStream {
       .orderBy("win_ms")
 
   val streamingKmvSql: String = {
-    val v = (0 until 15).map { j =>
-      s"(strpos('0123456789abcdef', substr(h, ${j + 1}, 1)) - 1) * ${BigInt(16).pow(14 - j)}"
-    }.mkString(" + ")
+    val v = OracleSql.hexPrefix("h", 15)
     s"""WITH e AS (
        |  SELECT (epoch_ms(ts) // 21600000) * 21600000 AS win_ms,
        |    md5(CAST(user_id AS VARCHAR)) AS h
