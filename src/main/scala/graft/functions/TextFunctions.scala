@@ -116,6 +116,10 @@ object TextFunctions {
   def nonSpaceCount(c: Column): Column =
     length(translate(c, wsChars, "")).cast("long")
 
+  /** DuckDB twin of [[nonSpaceCount]]. */
+  def nonSpaceCountSql(x: String): String =
+    s"length(regexp_replace($x, '$wsClass', '', 'g'))"
+
   /** The k-gram step (k ≥ 2) over a positioned token relation (doc_id,
     * pos, tok) — a posexplode of [[wsTokens]]: one row (doc_id, `as`) per
     * run of k consecutive tokens, joined by single spaces. A lead window over

@@ -669,7 +669,9 @@ object Corpus {
     * turns them into per-source token counts a sampler can actually
     * draw. Everything exact integers: quota = (B·nᵢ) div N, remainder =
     * (B·nᵢ) mod N, leftover = B − Σ quota handed out by a
-    * (remainder desc, source asc) rank over the ≤|sources| grid. */
+    * (remainder desc, source asc) rank over the ≤|sources| grid. A corpus
+    * without tokens has nothing to apportion: its shares and allocations
+    * are NULL. */
   def corpusTokenBudget(s: SparkSession, d: String): DataFrame = {
     val budget = 1000000L
     val perSrc = Tables.documents(s, d)
@@ -680,14 +682,14 @@ object Corpus {
     val tot = broadcast(perSrc.agg(sum("n_tokens").as("n")))
     val wr = Window.orderBy(col("rem").desc, col("source").asc)
     val quotas = perSrc.crossJoin(tot)
-      .withColumn("quota", expr(s"($budget * n_tokens) div n"))
-      .withColumn("rem", expr(s"($budget * n_tokens) % n"))
+      .withColumn("quota", expr(s"($budget * n_tokens) div nullif(n, 0)"))
+      .withColumn("rem", expr(s"($budget * n_tokens) % nullif(n, 0)"))
       .withColumn("rk", row_number().over(wr).cast("long"))
     val leftover = broadcast(quotas.agg(
       (lit(budget) - sum("quota")).as("left")))
     quotas.crossJoin(leftover)
       .select(col("source"), col("n_tokens"),
-        expr("(10000 * n_tokens) div n").as("share_bp"),
+        expr("(10000 * n_tokens) div nullif(n, 0)").as("share_bp"),
         (col("quota") + when(col("rk") <= col("left"), 1L).otherwise(0L))
           .as("alloc_tokens"),
         (col("rk") <= col("left")).as("got_extra"))
@@ -701,8 +703,8 @@ object Corpus {
       |), tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS n FROM ps
       |), q AS (
       |  SELECT p.source, p.n_tokens, t.n,
-      |    (1000000 * p.n_tokens) // t.n AS quota,
-      |    (1000000 * p.n_tokens) % t.n AS rem
+      |    (1000000 * p.n_tokens) // NULLIF(t.n, 0) AS quota,
+      |    (1000000 * p.n_tokens) % NULLIF(t.n, 0) AS rem
       |  FROM ps p CROSS JOIN tot t
       |), ranked AS (
       |  SELECT *, CAST(row_number() OVER (ORDER BY rem DESC, source)
@@ -710,7 +712,7 @@ object Corpus {
       |  FROM q
       |), lo AS (SELECT 1000000 - CAST(sum(quota) AS BIGINT) AS lefto FROM q)
       |SELECT r.source, r.n_tokens,
-      |  CAST((10000 * r.n_tokens) // r.n AS BIGINT) AS share_bp,
+      |  CAST((10000 * r.n_tokens) // NULLIF(r.n, 0) AS BIGINT) AS share_bp,
       |  CAST(r.quota + CASE WHEN r.rk <= l.lefto THEN 1 ELSE 0 END AS BIGINT)
       |    AS alloc_tokens,
       |  r.rk <= l.lefto AS got_extra
@@ -1469,8 +1471,11 @@ object Corpus {
   // capped at 3× (the standard don't-repeat-any-source-more-than-~3-epochs
   // rule), and account for the tokens the capped mixture actually yields.
   // weight_bp = total·10000 / (n_sources·tokens_s): >10000 upsamples a
-  // rare source, <10000 downsamples a dominant one. One corpus scan →
-  // per-source aggregate → broadcast 1-row totals; all integer.
+  // rare source, <10000 downsamples a dominant one. A source without
+  // tokens has no finite weight (raw NULL), so it sits at the cap with 0
+  // expected tokens; shares are NULL when the whole corpus has no tokens.
+  // One corpus scan → per-source aggregate → broadcast 1-row totals; all
+  // integer.
   // ---------------------------------------------------------------------
 
   def corpusMixWeights(s: SparkSession, d: String): DataFrame = {
@@ -1482,10 +1487,12 @@ object Corpus {
     val totals = perSource.agg(sum("n_tokens").as("t_tok"),
       count(lit(1)).as("n_sources"))
     perSource.crossJoin(broadcast(totals))
-      .withColumn("share_bp", expr("n_tokens * 10000 div t_tok"))
-      .withColumn("raw_weight_bp", expr("t_tok * 10000 div (n_sources * n_tokens)"))
-      .withColumn("weight_bp", least(col("raw_weight_bp"), lit(30000L)))
-      .withColumn("capped", col("raw_weight_bp") > 30000L)
+      .withColumn("share_bp", expr("n_tokens * 10000 div nullif(t_tok, 0)"))
+      .withColumn("raw_weight_bp",
+        expr("t_tok * 10000 div nullif(n_sources * n_tokens, 0)"))
+      .withColumn("capped", coalesce(col("raw_weight_bp") > 30000L, lit(true)))
+      .withColumn("weight_bp",
+        when(col("capped"), lit(30000L)).otherwise(col("raw_weight_bp")))
       .withColumn("expected_tokens", expr("n_tokens * weight_bp div 10000"))
       .select("source", "n_docs", "n_tokens", "share_bp", "weight_bp",
         "capped", "expected_tokens")
@@ -1501,15 +1508,21 @@ object Corpus {
       |  SELECT CAST(sum(n_tokens) AS BIGINT) AS t_tok,
       |    CAST(count(*) AS BIGINT) AS n_sources
       |  FROM per_source
+      |), raw AS (
+      |  SELECT source, n_docs, n_tokens,
+      |    CAST(n_tokens * 10000 // NULLIF(t_tok, 0) AS BIGINT) AS share_bp,
+      |    COALESCE(t_tok * 10000 // NULLIF(n_sources * n_tokens, 0) > 30000, true)
+      |      AS capped,
+      |    t_tok * 10000 // NULLIF(n_sources * n_tokens, 0) AS raw_weight_bp
+      |  FROM per_source CROSS JOIN totals
+      |), w AS (
+      |  SELECT *, CAST(CASE WHEN capped THEN 30000 ELSE raw_weight_bp END AS BIGINT)
+      |    AS weight_bp
+      |  FROM raw
       |)
-      |SELECT source, n_docs, n_tokens,
-      |  CAST(n_tokens * 10000 // t_tok AS BIGINT) AS share_bp,
-      |  CAST(LEAST(t_tok * 10000 // (n_sources * n_tokens), 30000)
-      |    AS BIGINT) AS weight_bp,
-      |  t_tok * 10000 // (n_sources * n_tokens) > 30000 AS capped,
-      |  CAST(n_tokens * LEAST(t_tok * 10000 // (n_sources * n_tokens), 30000)
-      |    // 10000 AS BIGINT) AS expected_tokens
-      |FROM per_source CROSS JOIN totals
+      |SELECT source, n_docs, n_tokens, share_bp, weight_bp, capped,
+      |  CAST(n_tokens * weight_bp // 10000 AS BIGINT) AS expected_tokens
+      |FROM w
       |ORDER BY source""".stripMargin
 
   /** Deterministic HASH-SHARD assignment with a balance audit: documents

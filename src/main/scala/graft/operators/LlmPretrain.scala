@@ -244,7 +244,7 @@ object LlmPretrain {
        |    length(text) AS len_chars,
        |    length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS n_alpha,
        |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct,
-       |    length(regexp_replace(text, '\\s', '', 'g')) AS n_nonspace,
+       |    ${nonSpaceCountSql("text")} AS n_nonspace,
        |    doc_id = min(doc_id) OVER (PARTITION BY md5(text)) AS exact_keeper
        |  FROM intake
        |), led1 AS (

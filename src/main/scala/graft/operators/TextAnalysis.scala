@@ -51,7 +51,7 @@ object TextAnalysis {
       |  SELECT doc_id,
       |    ${wordCountSql("text")} AS n_tokens,
       |    length(text) AS len_chars,
-      |    length(regexp_replace(text, '\\s', '', 'g')) AS n_nonspace,
+      |    ${nonSpaceCountSql("text")} AS n_nonspace,
       |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct
       |  FROM documents
       |)
@@ -666,7 +666,7 @@ object TextAnalysis {
       |    length(text) AS len_chars,
       |    length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS n_alpha,
       |    length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS n_punct,
-      |    length(regexp_replace(text, '\\s', '', 'g')) AS n_nonspace
+      |    ${nonSpaceCountSql("text")} AS n_nonspace
       |  FROM documents
       |), v AS (
       |  SELECT doc_id, n_tokens,

@@ -52,8 +52,9 @@ class TokenizerSpec extends SparkSpec {
     assert(result.passed, result.status.toString)
   }
 
-  /** Edge documents next to ordinary ones; every source also holds an
-    * ordinary document, so no source has zero tokens. */
+  /** Edge documents next to ordinary ones. The empty and the
+    * whitespace-only document make up source `blank`, which has no tokens;
+    * every other source also holds an ordinary document. */
   private val edgeDocs: Seq[(Long, String)] = Seq(
     1L -> "",
     2L -> " \t\u000B\f\r\n ",
@@ -68,13 +69,17 @@ class TokenizerSpec extends SparkSpec {
     11L -> "a b c d e f g h",
     12L -> "spark join filter window hash stream")
 
-  private def withEdgeDocs(f: String => Unit): Unit = {
+  private def sourceOf(id: Long): String = if (id <= 2) "blank" else s"src${id % 4}"
+
+  private def withDocs(docs: Seq[(Long, String)])(f: String => Unit): Unit = {
     val dir = tempDir("graft_edge_docs").toString
-    edgeDocs.map { case (id, t) => (id, t, "en", s"src${id % 4}", t.length.toLong) }
+    docs.map { case (id, t) => (id, t, "en", sourceOf(id), t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
     f(dir)
   }
+
+  private def withEdgeDocs(f: String => Unit): Unit = withDocs(edgeDocs)(f)
 
   private def counts(dir: String, text: org.apache.spark.sql.Column): Map[Long, Long] =
     Tables.documents(spark, dir).select(col("doc_id"), wordCount(text))
@@ -110,13 +115,38 @@ class TokenizerSpec extends SparkSpec {
       }
       val raw = counts(dir, col("text"))
       assert(raw(1L) == 0L && raw(2L) == 0L && raw(5L) == 2L && raw(8L) == 2L)
-      val bySource = raw.groupMapReduce { case (id, _) => s"src${id % 4}" }(_._2)(_ + _)
+      val bySource = raw.groupMapReduce { case (id, _) => sourceOf(id) }(_._2)(_ + _)
       Seq(Corpus.corpusTokenBudget(spark, dir), Corpus.corpusMixWeights(spark, dir))
         .foreach { q =>
           val got = q.collect().map(r =>
             r.getAs[String]("source") -> r.getAs[Long]("n_tokens")).toMap
           assert(got == bySource)
         }
+    }
+  }
+
+  test("a source without tokens: capped mix weight, and no division by zero") {
+    import operators.Corpus
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getAs[String]("source") -> r).toMap
+    withEdgeDocs { dir =>
+      val mix = rows(Corpus.corpusMixWeights(spark, dir))("blank")
+      assert(mix.getAs[Long]("n_tokens") == 0L && mix.getAs[Long]("share_bp") == 0L)
+      assert(mix.getAs[Long]("weight_bp") == 30000L && mix.getAs[Boolean]("capped"))
+      assert(mix.getAs[Long]("expected_tokens") == 0L)
+      val budget = rows(Corpus.corpusTokenBudget(spark, dir))
+      assert(budget("blank").getAs[Long]("alloc_tokens") == 0L)
+      assert(budget.values.map(_.getAs[Long]("alloc_tokens")).sum == 1000000L)
+    }
+    // a corpus without any token: every share and allocation is NULL
+    withDocs(edgeDocs.filter(_._1 <= 2)) { dir =>
+      val mix = Corpus.corpusMixWeights(spark, dir).collect().toSeq
+      assert(mix.map(_.getAs[Long]("n_docs")) == Seq(2L))
+      assert(mix.forall(r => r.isNullAt(r.fieldIndex("share_bp")) &&
+        r.getAs[Long]("weight_bp") == 30000L && r.getAs[Long]("expected_tokens") == 0L))
+      val budget = Corpus.corpusTokenBudget(spark, dir).collect().toSeq
+      assert(budget.size == 1 && Seq("share_bp", "alloc_tokens", "got_extra")
+        .forall(c => budget.head.isNullAt(budget.head.fieldIndex(c))))
     }
   }
 
