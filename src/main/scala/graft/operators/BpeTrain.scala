@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, Rounds, Tables}
 import graft.functions.TextFunctions.{wsTokens, wsTokensSql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * candidate positions by the pos − row_number() run trick and keeps the
   * odd-indexed candidate of each run. Word-type cardinality (not corpus
   * token count) bounds every relation, the same property that makes real
-  * BPE trainers feasible; each round's sequence relation is cached so R
-  * rounds cost R scans, not a 2^R plan.
+  * BPE trainers feasible; each round's sequence relation is cut
+  * (graft.Rounds) so R rounds cost R scans, not a 2^R plan.
   *
   * Fully oracled: integer counts end-to-end (no floats anywhere), ties on
   * the winning pair break (count desc, pair lexicographic) under binary
@@ -51,16 +51,16 @@ object BpeTrain {
       .select(explode(wsTokens(col("text"))).as("word"))
     val wc = toks.groupBy("word").agg(count(lit(1)).as("freq"))
     // initial symbol sequence: one row per (word type, char position)
-    var seq = wc
+    val init = wc
       .select(col("word"), col("freq"),
         posexplode(sequence(lit(1), length(col("word")))).as(Seq("ignored", "i")))
       .select(col("word"), col("freq"), (col("i") - 1).cast("long").as("pos"),
         expr("substring(word, i, 1)").as("sym"))
-      .localCheckpoint()
 
     val wp = Window.partitionBy("word").orderBy("pos")
-    var stats: DataFrame = null
-    for (round <- 1 to r) {
+    // each round's winning pair, kept for that round's stat row
+    val bests = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val seqs = Rounds.fixed("bpe", r, init) { (seq, _) =>
       val withNext = seq.withColumn("nsym", lead("sym", 1).over(wp))
       // localCheckpoint (1 row): the winning pair is consumed three times —
       // the broadcast below, this round's stat row, and (without the cut)
@@ -74,6 +74,7 @@ object BpeTrain {
         .limit(1)
         .select(col("sym").as("ba"), col("nsym").as("bb"), col("bcnt"))
         .localCheckpoint()
+      bests += best
       val cand = withNext.crossJoin(broadcast(best))
         .withColumn("iscand",
           col("nsym").isNotNull && col("sym") === col("ba") && col("nsym") === col("bb"))
@@ -87,7 +88,7 @@ object BpeTrain {
       // max — same (word)-keyed window, no join — and the consumed right
       // half is lag(real): drop a row whose predecessor merged.
       val wBefore = wp.rowsBetween(Window.unboundedPreceding, -1)
-      val merged = cand
+      cand
         .withColumn("lnc",
           max(when(!col("iscand"), col("pos"))).over(wBefore))
         .withColumn("real",
@@ -101,45 +102,38 @@ object BpeTrain {
           (row_number().over(Window.partitionBy("word").orderBy("oldpos")) - 1)
             .cast("long"))
         .select("word", "freq", "pos", "sym")
-        // localCheckpoint, not cache: each round references the previous
-        // round's relation several times (pair count, merge pass, symbol
-        // accounting), so the LOGICAL plan grows exponentially without
-        // lineage truncation — Catalyst optimization time explodes even
-        // though the data is tiny (measured 61 s at R=4 with cache, ~6 s
-        // with checkpoint). Same pattern as the rounds of
-        // Dedup.pointerJumpLabels, the connected-components loop.
-        .localCheckpoint()
-      val nAfter = merged.agg(sum("freq").as("n_symbols_after"))
-      val stat = best.crossJoin(nAfter)
-        .select(lit(round.toLong).as("round"), col("ba").as("sym_a"),
+    }
+    val stats = bests.zip(seqs.tail).zipWithIndex.map { case ((best, merged), i) =>
+      best.crossJoin(merged.agg(sum("freq").as("n_symbols_after")))
+        .select(lit(i + 1L).as("round"), col("ba").as("sym_a"),
           col("bb").as("sym_b"), col("bcnt").as("pair_count"),
           col("n_symbols_after"))
-      stats = if (stats == null) stat else stats.unionByName(stat)
-      seq = merged
-    }
-    BpeResult(stats.orderBy("round"), seq)
+    }.reduce(_ unionByName _)
+    BpeResult(stats.orderBy("round"), seqs.last)
   }
 
   /** Shared DuckDB CTE text for one merge round (p/best/cand/real/m/s
     * chain, no stat row) — composed by BOTH the train oracle (which adds
     * per-round stat CTEs) and the encode oracle (which only needs the
-    * final sequence s{R+1}). */
+    * final sequence s{R+1}). AS MATERIALIZED on every CTE a later CTE
+    * reads more than once: DuckDB inlines plain CTEs, so the unrolled
+    * rounds re-expand each other and spill gigabytes at sf0.01. */
   private def roundCoreSql(r: Int): String = {
       val prev = s"s$r"
-      s"""p$r AS (
+      s"""p$r AS MATERIALIZED (
          |  SELECT word, freq, pos, sym,
          |    lead(sym) OVER (PARTITION BY word ORDER BY pos) AS nsym
          |  FROM $prev
-         |), best$r AS (
+         |), best$r AS MATERIALIZED (
          |  SELECT sym AS ba, nsym AS bb, CAST(cnt AS BIGINT) AS bcnt FROM (
          |    SELECT sym, nsym, sum(freq) AS cnt FROM p$r WHERE nsym IS NOT NULL
          |    GROUP BY sym, nsym
          |  ) ORDER BY cnt DESC, sym, nsym LIMIT 1
-         |), cand$r AS (
+         |), cand$r AS MATERIALIZED (
          |  SELECT p.word, p.freq, p.pos, p.sym, b.ba, b.bb,
          |    (p.nsym IS NOT NULL AND p.sym = b.ba AND p.nsym = b.bb) AS iscand
          |  FROM p$r p CROSS JOIN best$r b
-         |), real$r AS (
+         |), real$r AS MATERIALIZED (
          |  SELECT word, pos FROM (
          |    SELECT word, pos,
          |      row_number() OVER (PARTITION BY word, grp ORDER BY pos) AS k
@@ -156,7 +150,7 @@ object BpeTrain {
          |  LEFT JOIN real$r ra ON ra.word = c.word AND ra.pos = c.pos
          |  LEFT JOIN real$r rb ON rb.word = c.word AND rb.pos = c.pos - 1
          |  WHERE rb.pos IS NULL
-         |), s${r + 1} AS (
+         |), s${r + 1} AS MATERIALIZED (
          |  SELECT word, freq,
          |    CAST(row_number() OVER (PARTITION BY word ORDER BY oldpos) - 1
          |      AS BIGINT) AS pos,
@@ -184,7 +178,7 @@ object BpeTrain {
        |  SELECT word FROM dtoks
        |), wc AS (
        |  SELECT word, count(*) AS freq FROM toks GROUP BY word
-       |), s1 AS (
+       |), s1 AS MATERIALIZED (
        |  SELECT word, freq, CAST(i - 1 AS BIGINT) AS pos, substr(word, i, 1) AS sym
        |  FROM (SELECT word, freq, unnest(generate_series(1, length(word))) AS i
        |        FROM wc)

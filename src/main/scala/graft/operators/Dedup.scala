@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, Rounds, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -305,13 +305,10 @@ object Dedup {
     * (llm_pretrain_e2e) applies EXACTLY the production banding + exact-
     * verify semantics to its survivor set rather than a re-derivation. */
   private[operators] def lshVerifiedPairs(sh: DataFrame, sig: DataFrame): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    // band hash = xxhash64 over the band's 4 signature slots; n_sh rides
-    // along so the final Jaccard denominator needs no join back to sig
-    val bandArr = array((0 until bands).map(b =>
-      xxhash64((b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"h$i")): _*)): _*)
+    // n_sh rides along so the final Jaccard denominator needs no join back
+    // to sig
     val banded = sig.select(col("doc_id"), col("n_sh"),
-      posexplode(bandArr).as(Seq("band_idx", "band_hash")))
+      posexplode(bandArray).as(Seq("band_idx", "band_hash")))
     val cand = banded.as("a").join(banded.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_hash") === col("b.band_hash") &&
@@ -693,9 +690,10 @@ object Dedup {
     * so chains collapse doubling-fast: O(log diameter) rounds, genuinely —
     * one-hop propagation alone would need O(diameter). One driver action
     * per round (a one-row sum that doubles as the convergence signal:
-    * labels only ever decrease, so an unchanged sum is a fixpoint). If the
-    * cap is ever hit without convergence the query FAILS rather than
-    * silently emitting partial clusters. Returns (doc, lbl). */
+    * labels only ever decrease, so an unchanged sum is a fixpoint). The
+    * cap of 20 rounds covers component diameters up to about 2^20; past
+    * it the query fails rather than emitting partial clusters. Returns
+    * (doc, lbl). */
   private def pointerJumpLabels(pairs: DataFrame, loopParts: Int): DataFrame = {
     // both edge directions in ONE pass over the cached pairs
     val edges = pairs
@@ -704,20 +702,20 @@ object Dedup {
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select("e.src", "e.dst")
       .cache()
-    var labels = edges.select(col("src").as("doc"))
+    val init = edges.select(col("src").as("doc"))
       .repartition(loopParts, col("doc")).distinct()
       .withColumn("lbl", col("doc"))
-      .cache()
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum("lbl"), lit(0L))).head().getLong(0)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var iters = 0
-    val maxIters = 20
-    while (!converged && iters < maxIters) {
+    // a round's `prop` stays cached until the next round starts, when the
+    // state built from it has been cut
+    val props = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val labels = Rounds.untilStable("cc", 20, init) { (labels, _) =>
+      props.foreach(_.unpersist()); props.clear()
       // hop: pull each neighbor's label across the edges, keep the min.
       // The explicit repartition pins the aggregate's one exchange at the
       // state-sized width (groupBy reuses the hash(doc) partitioning).
+      // Cached: the jump reads it on both sides, and uncached that
+      // self-join over the checkpointed labels fails in the optimizer
+      // (Union.rewriteConstraints: "key not found: doc#…").
       val prop = labels
         .join(edges, col("doc") === col("src"))
         .select(col("dst").as("doc"), col("lbl"))
@@ -725,33 +723,17 @@ object Dedup {
         .repartition(loopParts, col("doc"))
         .groupBy("doc").agg(min("lbl").as("lbl"))
         .cache()
+      props += prop
       // jump: lbl ← lbl(lbl). Every lbl value is itself a doc in the table
       // and lbl(y) <= y (min-label invariant), so the left join + least is
       // monotone; docs are unique in `prop`, so no re-aggregation needed.
-      //
-      // localCheckpoint (eager), NOT cache: the self-join doubles the logical
-      // plan every round, so an uncut lineage grows exponentially and blows
-      // the planner's stack after ~8 rounds. Checkpointing resets the plan to
-      // a leaf each round. (A fault-tolerant cluster run would use
-      // checkpoint() with a reliable dir; local[...] has no such dir.)
-      val jumped = prop.as("p")
+      prop.as("p")
         .join(prop.as("q"), col("p.lbl") === col("q.doc"), "left")
         .select(col("p.doc").as("doc"),
           coalesce(least(col("p.lbl"), col("q.lbl")), col("p.lbl")).as("lbl"))
-        .localCheckpoint()
-      val after = labelSum(jumped)
-      labels.unpersist(); prop.unpersist()
-      labels = jumped
-      converged = after == prevSum
-      prevSum = after
-      iters += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"dedup_clusters: not converged after $maxIters pointer-jumping rounds " +
-          "(component diameter > 2^20?) — refusing to emit partial clusters")
-    // the labels are checkpointed: neither input cache is read again
-    edges.unpersist(); pairs.unpersist()
+    }(_.agg(coalesce(sum("lbl"), lit(0L))).head().getLong(0))
+    // the labels are checkpointed: no cache is read again
+    props.foreach(_.unpersist()); edges.unpersist(); pairs.unpersist()
     labels
   }
 
@@ -920,8 +902,9 @@ object Dedup {
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       .withColumnRenamed("doc_id", "vec_id")
 
-  /** The 8-band hash array over the h0..h31 signature columns — shared by
-    * the LSH variants and the corpus band index. */
+  /** The 8-band hash array over the h0..h31 signature columns (band hash =
+    * xxhash64 over the band's 4 slots) — shared by the LSH variants and
+    * the corpus band index. */
   private def bandArray: org.apache.spark.sql.Column = {
     val rowsPerBand = numHashes / bands
     array((0 until bands).map(b =>
@@ -1664,21 +1647,10 @@ object Dedup {
   // empirically all, at every test SF).
   // ---------------------------------------------------------------------
   def dedupIncremental(s: SparkSession, d: String): DataFrame = {
-    val numHashes = 32
-    val bands = 8
-    val rowsPerBand = numHashes / bands
-    val sides = Tables.documents(s, d)
-      .select(col("doc_id"), col("source").isin("src0", "src1").as("is_new"))
     val sh = shingleRelation(s, d)
-    val sigCols = (0 until numHashes).map(i =>
-      min(xxhash64(lit(i), col("shingle"))).as(s"h$i"))
-    val sig = sh.groupBy("doc_id")
-      .agg(sigCols.head, (sigCols.tail :+ count(lit(1)).as("n_sh")): _*)
-      .join(sides, "doc_id")
-    val bandArr = array((0 until bands).map(b =>
-      xxhash64((b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"h$i")): _*)): _*)
-    val banded = sig.select(col("doc_id"), col("n_sh"), col("is_new"),
-      posexplode(bandArr).as(Seq("band_idx", "band_hash")))
+    val banded = minhashSignatures(sh).join(sidesOf(s, d), "doc_id")
+      .select(col("doc_id"), col("n_sh"), col("is_new"),
+        posexplode(bandArray).as(Seq("band_idx", "band_hash")))
     val corpusB = banded.filter(!col("is_new"))
       .select(col("doc_id").as("corpus_doc"), col("n_sh").as("nc"),
         col("band_idx"), col("band_hash"))

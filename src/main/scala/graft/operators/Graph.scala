@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, Rounds, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -486,8 +486,6 @@ object Graph {
   // Scale shape: each round is one shuffle-join of the cached edge relation
   // against the current survivor set plus a hash-aggregate — same cost
   // shape as one PageRank round. The survivor set only shrinks.
-  // localCheckpoint per round caps logical-plan growth (cur is referenced
-  // twice per round ⇒ 2^R plan nodes without it — the BpeTrain lesson).
   // At 100 TB: bucket edges by src; the per-round aggregate is map-side
   // partial; stop early when count(survivors) stabilizes (the fixed-round
   // form here is what makes the cross-engine oracle exact).
@@ -516,26 +514,20 @@ object Graph {
   def qKcoreStaged(s: SparkSession, d: String): DataFrame =
     kcoreOn(stagedMultiEdgeRelation(s, d).select("src", "dst").cache())
 
-  private def kcoreOn(edges: DataFrame): DataFrame = {
-    var cur = edges.select(col("src").as("node")).distinct().localCheckpoint()
-    val trajectory = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def snapshot(r: Int, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).cast("long").as("survivors"),
-          coalesce(sum("node"), lit(0L)).as("node_sum"))
-        .select(lit(r.toLong).as("peel_round"), col("survivors"), col("node_sum"))
-    trajectory += snapshot(0, cur)
-    for (r <- 1 to peelRounds) {
-      cur = edges
+  private def kcoreOn(edges: DataFrame): DataFrame =
+    Rounds.fixed("kcore", peelRounds,
+      edges.select(col("src").as("node")).distinct()) { (cur, _) =>
+      edges
         .join(cur.select(col("node").as("sn")), col("src") === col("sn"))
         .join(cur.select(col("node").as("dn")), col("dst") === col("dn"))
         .groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= kCoreK)
         .select(col("src").as("node"))
-        .localCheckpoint()
-      trajectory += snapshot(r, cur)
-    }
-    trajectory.reduce(_ unionAll _).orderBy("peel_round")
-  }
+    }.zipWithIndex.map { case (cur, r) =>
+      cur.agg(count(lit(1)).cast("long").as("survivors"),
+          coalesce(sum("node"), lit(0L)).as("node_sum"))
+        .select(lit(r.toLong).as("peel_round"), col("survivors"), col("node_sum"))
+    }.reduce(_ unionAll _).orderBy("peel_round")
 
   private val qKcoreSql: String = {
     // AS MATERIALIZED: each peel level references the previous one TWICE;
@@ -649,10 +641,10 @@ object Graph {
   // so every node's final distance is hashed (bucket = dist div 100000).
   //
   // Scale shape: one shuffle-join + min-aggregate per round against the
-  // CACHED weighted edge relation; dist is localCheckpoint'd per round so
-  // the plan stays round-local. K rounds = K-hop-bounded distances
-  // (documented truncation, same contract as q_bfs_layers); at 100 TB
-  // bucket edges by src for an exchange-free relaxation join.
+  // CACHED weighted edge relation; dist is cut per round (graft.Rounds).
+  // K rounds = K-hop-bounded distances (documented truncation, same
+  // contract as q_bfs_layers); at 100 TB bucket edges by src for an
+  // exchange-free relaxation join.
   // ---------------------------------------------------------------------
   private val ssspRounds = 3
   private val ssspSeeds = 20
@@ -679,14 +671,12 @@ object Graph {
   private def ssspOn(edges: DataFrame): DataFrame = {
     val seeds = edges.select(col("src").as("node")).distinct()
       .orderBy("node").limit(ssspSeeds)
-    var dist = seeds.select(col("node"), lit(0L).as("dist")).localCheckpoint()
-    for (_ <- 1 to ssspRounds) {
+    Rounds.fixed("sssp", ssspRounds,
+      seeds.select(col("node"), lit(0L).as("dist"))) { (dist, _) =>
       val relaxed = edges.join(dist, col("src") === col("node"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionAll(relaxed).groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint()
-    }
-    dist.groupBy(expr("dist div 100000").as("dist_bucket"))
+      dist.unionAll(relaxed).groupBy("node").agg(min("dist").as("dist"))
+    }.last.groupBy(expr("dist div 100000").as("dist_bucket"))
       .agg(count(lit(1)).cast("long").as("n_nodes"), sum("node").as("node_sum"))
       .orderBy("dist_bucket")
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, Rounds, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,7 +29,7 @@ object Mining {
   // (node → 2^i-th ancestor) square each round, so a depth-d tree closes in
   // ⌈log2 d⌉ joins (5 rounds covers depth 32; a 100 TB catalog hierarchy
   // is depth < 32). Per round: one self-join of the closure relation +
-  // union-distinct, localCheckpoint to cap plan growth. The closure has
+  // distinct, cut by graft.Rounds to cap plan growth. The closure has
   // O(n·d) rows — for shallow real hierarchies effectively linear. The
   // rollup is then ONE hash-aggregate grouped by ancestor. The driver-side
   // loop condition is a bounded count() per round (≤ ⌈log2 d⌉ rounds),
@@ -45,23 +45,18 @@ object Mining {
       .select(col("node").as("child"), floor(col("node") / lit(2L)).as("parent"))
     // closure starts at distance-0 (self) ∪ distance-1 (parent) pairs and
     // doubles: (n →d1 m) ⋈ (m →d2 a) ⇒ (n →d1+d2 a), distinct, to fixpoint
-    var closure = sup.select(col("node"), col("node").as("anc"), lit(0L).as("d"))
+    val init = sup.select(col("node"), col("node").as("anc"), lit(0L).as("d"))
       .unionAll(parents.select(col("child").as("node"), col("parent").as("anc"),
         lit(1L).as("d")))
-      .localCheckpoint()
-    var n = closure.count()
-    var grown = true
-    while (grown) {
-      closure = closure.as("x").join(closure.as("y"),
-          col("x.anc") === col("y.node"))
+    // the closure only grows (the self pairs re-derive every old row), so
+    // an unchanged count is the fixpoint; doubling over long ids reaches
+    // any depth within 64 rounds
+    val closure = Rounds.untilStable("hierarchy", 64, init) { (closure, _) =>
+      closure.as("x").join(closure.as("y"), col("x.anc") === col("y.node"))
         .select(col("x.node").as("node"), col("y.anc").as("anc"),
           (col("x.d") + col("y.d")).as("d"))
         .distinct()
-        .localCheckpoint()
-      val n2 = closure.count()
-      grown = n2 > n
-      n = n2
-    }
+    }(_.count())
     val rollup = closure.join(sup, "node")
       .groupBy(col("anc"))
       .agg(count(lit(1)).as("subtree_size"), sum("bal_cents").as("subtree_cents"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, Rounds, Tables}
 import graft.functions.VectorFunctions.{asDouble, vecDot, vecNorm}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1124,11 +1124,10 @@ object Similarity {
           .cast("long").as("rel"))
       .cache()
 
-    var picks = rel.orderBy(col("rel").desc, col("vec_id").asc).limit(1)
+    val pick1 = rel.orderBy(col("rel").desc, col("vec_id").asc).limit(1)
       .select(lit(1L).as("rk"), col("vec_id"), col("v"), col("nrm"),
         col("rel"), (col("rel") * 7).as("score_u"))
-      .cache()
-    for (r <- 2 to k) {
+    Rounds.fixed("mmr", k - 1, pick1) { (picks, r) =>
       val sel = picks.select(col("vec_id").as("sid"), col("v").as("sv"),
         col("nrm").as("snrm"))
       val next = rel
@@ -1143,14 +1142,10 @@ object Similarity {
         .select(col("vec_id"), col("v"), col("nrm"), col("rel"),
           (col("rel") * 7 - col("maxsim") * 3).as("score_u"))
         .orderBy(col("score_u").desc, col("vec_id").asc).limit(1)
-        .select(lit(r.toLong).as("rk"), col("vec_id"), col("v"), col("nrm"),
+        .select(lit(r + 1L).as("rk"), col("vec_id"), col("v"), col("nrm"),
           col("rel"), col("score_u"))
-      // lineage truncation per round (the BpeTrain lesson): `picks` feeds
-      // the anti-join, the broadcast sel, and the union — without a
-      // checkpoint the logical plan grows geometrically in k
-      picks = picks.unionByName(next).localCheckpoint()
-    }
-    picks.select("rk", "vec_id", "rel", "score_u").orderBy("rk")
+      picks.unionByName(next)
+    }.last.select("rk", "vec_id", "rel", "score_u").orderBy("rk")
   }
 
   private val simDiversitySampleSql = {

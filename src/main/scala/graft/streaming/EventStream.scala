@@ -23,16 +23,6 @@ import org.apache.spark.sql.types._
   */
 object EventStream {
 
-  /** State-store backend rung: every streaming query here runs on the
-    * default HDFS-backed in-memory provider OR on RocksDB, flipped by ONE
-    * session flag (`spark.graft.stateStore` = `hdfs` | `rocksdb`, env
-    * `SPARK_GRAFT_STATE_STORE` as fallback). At 100 TB the production
-    * backend is RocksDB — state (session windows, join buffers, KMV
-    * sketches) lives off-heap on local SSD instead of in executor heap
-    * snapshots, so state size is bounded by disk, not memory.
-    * StreamingSpec proves backend parity (same results both rungs); the
-    * provider is read from SQLConf at query start, so setting it here
-    * applies per started query, never retroactively. */
   /** Unload every loaded state-store provider (local mode: the executors
     * share this JVM). A stopped replay-harness query leaves its providers —
     * 32 shuffle partitions × up to 4 stores for a stream-stream join —
@@ -48,9 +38,18 @@ object EventStream {
   private[graft] def unloadStateStores(): Unit =
     org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
 
+  /** State-store backend rung: every streaming query here runs on the
+    * default HDFS-backed in-memory provider OR on RocksDB, flipped by ONE
+    * session flag, `spark.graft.stateStore` = `hdfs` (default) |
+    * `rocksdb`. At 100 TB the production backend is RocksDB — state
+    * (session windows, join buffers, KMV sketches) lives off-heap on local
+    * SSD instead of in executor heap snapshots, so state size is bounded
+    * by disk, not memory.
+    * StreamingSpec proves backend parity (same results both rungs); the
+    * provider is read from SQLConf at query start, so setting it here
+    * applies per started query, never retroactively. */
   private[graft] def applyStateStore(s: SparkSession): Unit = {
-    val choice = s.conf.getOption("spark.graft.stateStore")
-      .orElse(sys.env.get("SPARK_GRAFT_STATE_STORE")).getOrElse("hdfs")
+    val choice = s.conf.getOption("spark.graft.stateStore").getOrElse("hdfs")
     val provider =
       if (choice.equalsIgnoreCase("rocksdb"))
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"

@@ -175,10 +175,15 @@ class DedupSpec extends SparkSpec {
     // ~200 rounds and trip the cap (a loud failure); pointer jumping must
     // converge in O(log d). The driver path must give the same closure.
     val chain = (0L until 200L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    import org.apache.spark.sql.graft.CacheBridge
     Seq(0L, 5000000L).foreach { limit =>
+      val cached = CacheBridge.entries(spark)
       val labels = operators.Dedup.clusterPairs(chain, limit).collect()
       assert(labels.length == 201, s"limit $limit")
       assert(labels.forall(_.getAs[Long]("cluster") == 0L), s"limit $limit")
+      // the loop's input and per-round caches are all released
+      if (limit == 0L)
+        assert(CacheBridge.entries(spark) == cached, "a cache entry outlives clusterPairs")
     }
   }
 

@@ -6,6 +6,7 @@ package graft
   */
 class PlanSpec extends SparkSpec {
   import operators._
+  import PlanSpec.SuiteOffenders
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -118,21 +119,7 @@ class PlanSpec extends SparkSpec {
     // the statistic from counts instead (q_window_distribution's count
     // grid, q_decile_lift's sliced ranking). Streaming queries execute on
     // construction and can't host these functions — skipped by name.
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
-    import org.apache.spark.sql.catalyst.expressions.{CumeDist, NTile, PercentRank}
-    val offenders = SparkEntry.allQueries
-      .filterNot(_.name.startsWith("streaming_"))
-      .flatMap { q =>
-        val plan = q.build(spark, sf).queryExecution.optimizedPlan
-        val hit = plan.collect {
-          case w: LogicalWindow if w.partitionSpec.isEmpty &&
-            w.windowExpressions.exists(_.exists {
-              case _: NTile | _: PercentRank | _: CumeDist => true
-              case _ => false
-            }) => w
-        }
-        if (hit.nonEmpty) Some(q.name) else None
-      }
+    val offenders = suiteOffenders.windows
     assert(offenders.isEmpty,
       s"unpartitioned distribution-function window (single-partition sort " +
         s"of a data-grain input!): $offenders")
@@ -428,47 +415,85 @@ class PlanSpec extends SparkSpec {
     // BroadcastNestedLoopJoin over a broadcast-small side is an intentional
     // pattern (query-set scoring, anchor assignment); a CartesianProduct
     // node means two big sides crossed — always a 100 TB failure
-    val offenders = SparkEntry.allQueries.flatMap { q =>
-      val plan = q.build(spark, sf).queryExecution.executedPlan.toString
-      if (plan.contains("CartesianProduct")) Some(q.name) else None
-    }
+    val offenders = suiteOffenders.cartesians
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
   }
 
   test("every query prunes every testdata parquet scan (no full-width reads)") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val violations = SparkEntry.allQueries.flatMap { q =>
-      // sparkPlan is the pre-AQE physical plan: scans are visible as nodes
-      // (executedPlan wraps everything in AdaptiveSparkPlanExec). Subqueries
-      // are walked MANUALLY: at this phase InjectRuntimeFilter's bloom
-      // subqueries are still LOGICAL plans inside ScalarSubquery
-      // expressions (they fire when a warm cache gives accurate stats), and
-      // collectWithSubqueries would cast them to SparkPlan and throw. A
-      // logical subquery tree references the same relations the main tree
-      // scans, so skipping it drops no coverage.
-      val plan = q.build(spark, sf).queryExecution.sparkPlan
-      val subPlans = plan.collect { case n => n }
-        .flatMap(_.expressions)
-        .flatMap(_.collect {
-          case pe: org.apache.spark.sql.catalyst.expressions.PlanExpression[_] =>
-            pe.plan
-        })
-        .collect { case sp: org.apache.spark.sql.execution.SparkPlan => sp }
-      (plan +: subPlans).flatMap(_.collect {
-        case s: FileSourceScanExec => s
-      }).flatMap { s =>
-        val path = s.relation.location.rootPaths.headOption.map(_.toString).getOrElse("")
-        val table = path.split('/').last
-        val full = s.relation.dataSchema.size
-        val read = s.requiredSchema.size
-        if (path.contains("testdata") && read >= full &&
-            !fullWidthAllowed.contains((q.name, table)))
-          Some(s"${q.name}: $table scanned full-width ($read/$full cols: " +
-            s"${s.requiredSchema.fieldNames.mkString(",")})")
-        else None
-      }
-    }
+    val violations = suiteOffenders.unpruned
     assert(violations.isEmpty,
       s"unpruned scans:\n${violations.mkString("\n")}")
   }
+
+  /** The three whole-suite guards above share ONE pass: building a query
+    * runs its eager construction jobs, the bulk of the cost, so each query
+    * is built once and the plan phase each guard inspects is read from
+    * that one QueryExecution. Computed on the first guard's use. */
+  private lazy val suiteOffenders: SuiteOffenders = {
+    val perQuery = SparkEntry.allQueries.map { q =>
+      val qe = q.build(spark, sf).queryExecution
+      // the window guard skips streaming queries by name (see its test)
+      val window =
+        if (q.name.startsWith("streaming_")) None
+        else unpartitionedDistWindow(q.name, qe.optimizedPlan)
+      val unpruned = unprunedScans(q.name, qe.sparkPlan)
+      val cartesian =
+        if (qe.executedPlan.toString.contains("CartesianProduct")) Some(q.name) else None
+      SuiteOffenders(window.toSeq, cartesian.toSeq, unpruned)
+    }
+    SuiteOffenders(perQuery.flatMap(_.windows), perQuery.flatMap(_.cartesians),
+      perQuery.flatMap(_.unpruned))
+  }
+
+  private def unpartitionedDistWindow(name: String,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Option[String] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
+    import org.apache.spark.sql.catalyst.expressions.{CumeDist, NTile, PercentRank}
+    val hit = plan.collect {
+      case w: LogicalWindow if w.partitionSpec.isEmpty &&
+        w.windowExpressions.exists(_.exists {
+          case _: NTile | _: PercentRank | _: CumeDist => true
+          case _ => false
+        }) => w
+    }
+    if (hit.nonEmpty) Some(name) else None
+  }
+
+  private def unprunedScans(name: String,
+      plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    // sparkPlan is the pre-AQE physical plan: scans are visible as nodes
+    // (executedPlan wraps everything in AdaptiveSparkPlanExec). Subqueries
+    // are walked MANUALLY: at this phase InjectRuntimeFilter's bloom
+    // subqueries are still LOGICAL plans inside ScalarSubquery
+    // expressions (they fire when a warm cache gives accurate stats), and
+    // collectWithSubqueries would cast them to SparkPlan and throw. A
+    // logical subquery tree references the same relations the main tree
+    // scans, so skipping it drops no coverage.
+    val subPlans = plan.collect { case n => n }
+      .flatMap(_.expressions)
+      .flatMap(_.collect {
+        case pe: org.apache.spark.sql.catalyst.expressions.PlanExpression[_] =>
+          pe.plan
+      })
+      .collect { case sp: org.apache.spark.sql.execution.SparkPlan => sp }
+    (plan +: subPlans).flatMap(_.collect {
+      case s: FileSourceScanExec => s
+    }).flatMap { s =>
+      val path = s.relation.location.rootPaths.headOption.map(_.toString).getOrElse("")
+      val table = path.split('/').last
+      val full = s.relation.dataSchema.size
+      val read = s.requiredSchema.size
+      if (path.contains("testdata") && read >= full &&
+          !fullWidthAllowed.contains((name, table)))
+        Some(s"$name: $table scanned full-width ($read/$full cols: " +
+          s"${s.requiredSchema.fieldNames.mkString(",")})")
+      else None
+    }
+  }
+}
+
+object PlanSpec {
+  private final case class SuiteOffenders(windows: Seq[String],
+      cartesians: Seq[String], unpruned: Seq[String])
 }
