@@ -40,13 +40,15 @@ object Layouts {
     // dir copies: compacted layout, Z-ordered lineitem
     "compacted" -> ((s, d) => { sources.Compaction.compactedDir(s, d); () }),
     "lineitem_z" -> ((s, d) => { sources.ZOrderLayout.ensureStaged(s, d); () }),
-    // /tmp fixtures: corrupt JSONL intake (events + documents), normalized
-    // events for the streaming replay harness
+    // /tmp fixtures: corrupt JSONL intake (events + documents)
     "fixture_jsonl_q" -> ((s, d) => { sources.Quarantine.stageCorruptJsonl(s, d); () }),
     "fixture_docs_q" -> ((s, d) => { operators.LlmPretrain.stageCorruptDocsJsonl(s, d); () }),
-    "fixture_events_norm" -> ((s, d) => { streaming.EventStream.ensureNormalizedFixture(s, d); () }),
-    // far-future watermark sentinel for the outer-join replay (r17; the
-    // dedup replay phase fixtures stage inside "dedup" above)
-    "fixture_outer_sentinel" -> ((s, d) => { streaming.EventStream.ensureOuterSentinelFixture(s, d); () })
+    // streaming replay phases (the dedup replay phases stage inside
+    // "dedup" above): normalized events, the outer-join sentinel, the
+    // late-drop halves, the CDC feed
+    "fixture_events_norm" -> ((s, d) => { streaming.EventStream.eventsPhase(s, d); () }),
+    "fixture_outer_sentinel" -> ((s, d) => { streaming.EventStream.outerSentinelPhase(s, d); () }),
+    "fixture_late_drop" -> ((s, d) => { streaming.EventStream.latePhases(s, d); () }),
+    "fixture_cdc_feed" -> ((s, d) => { streaming.EventStream.cdcPhases(s, d); () })
   )
 }

@@ -212,12 +212,11 @@ object ScaleSmoke {
     "dedup_index_append_apply" ->
       ((s: SparkSession, d: String) => operators.Dedup.indexAppendApply(s, d)),
     // streaming_join_outer split-measured (the ivfpq build/search
-    // pattern): _stage = the harness half (normalize + sentinel write),
-    // the full query = stage + two-phase watermark replay; replay cost
-    // is the difference
+    // pattern): _stage = the staging half (normalized events + sentinel
+    // phase fixtures), the full query = stage + two-phase watermark
+    // replay; replay cost is the difference
     "streaming_join_outer_stage" -> { (s, d) =>
-      val (staged, _) = streaming.EventStream.stageJoinOuterInputs(s, d)
-      graft.sources.Staging.deleteRecursively(staged.toFile)
+      streaming.EventStream.joinOuterPhases(s, d)
       s.range(1).toDF("ok")
     })
 

@@ -2,9 +2,12 @@ package graft.operators
 
 import graft.{Q, Rounds, Tables}
 import graft.functions.TextFunctions._
+import graft.streaming.Replay
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.StructType
 
 /** Deduplication family for LLM-training-data pipelines: exact, MinHash/LSH,
   * SimHash, and embedding-cosine near-dup. Generalizes the reference's
@@ -1121,123 +1124,31 @@ object Dedup {
       .filter(col("source").isin("src0", "src1"))
       .select("doc_id", "text")
 
-  /** Replay-source PHASE FILES memoized as /tmp fixtures (r17 — the
-    * events_norm precedent applied to the dedup replays): each phase's
-    * file set is a pure function of the static dataset plus a constant
-    * arrival timestamp, so the repartition+write Spark job every replay
-    * CALL used to pay per phase becomes a millisecond file copy. The
-    * multi-file layout itself is unchanged (~defaultParallelism files per
-    * doc phase — the r16 arrival-parallelism rationale: the per-row
-    * signature pass runs in the micro-batch's scan stage). Fixtures are
-    * staged once per JVM (Bench's registry pre-stages them untimed). */
-  private def ensurePhaseFixture(s: SparkSession, d: String, tag: String,
-      nFiles: Int)(df: => DataFrame): String =
-    graft.sources.Staging.ensureFixture(tag, d) { path =>
-      val tmp = path + "_tmp"
-      (if (nFiles == 1) df.coalesce(1)
-       else df.repartition(nFiles, col("doc_id"))).write.parquet(tmp)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
-      new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).zipWithIndex.foreach {
-          case (part, i) => java.nio.file.Files.move(part.toPath,
-            java.nio.file.Paths.get(path, s"p$i.parquet")) }
-      graft.sources.Staging.deleteRecursively(new java.io.File(tmp))
-    }
-
-  /** Phase arrival = copying the fixture's files into the watched src
-    * dir under a per-phase prefix. */
-  private def copyPhaseInto(fixture: String, srcDir: java.nio.file.Path,
-      name: String): Unit =
-    new java.io.File(fixture).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).zipWithIndex
-      .foreach { case (f, i) =>
-        java.nio.file.Files.copy(f.toPath, srcDir.resolve(s"${name}_$i.parquet"))
-        ()
-      }
-
-  /** The five replay phase fixtures, one def per phase so the replay
-    * queries and the pre-stage registry can never drift apart. */
-  private def neardupHalfFixture(s: SparkSession, d: String,
-      even: Boolean): String =
-    ensurePhaseFixture(s, d, if (even) "sneardup_b1" else "sneardup_b2",
-      s.sparkContext.defaultParallelism)(
-      replayDocs(s, d).filter(col("doc_id") % 2 === (if (even) 0 else 1)))
-
-  private val wmT0 = 1700000000000L // fixed epoch; only differences matter
-  private val wmT3h = wmT0 + 3L * 3600000L
-
-  private def wmDocsFixture(s: SparkSession, d: String,
-      first: Boolean): String =
-    ensurePhaseFixture(s, d, if (first) "sndwm_p1" else "sndwm_p3",
-      s.sparkContext.defaultParallelism)(
-      replayDocs(s, d).withColumn("ats_ms", lit(if (first) wmT0 else wmT3h)))
-
-  /** Sentinel: tokens that cannot occur in any document's text, so it
-    * advances the watermark but can never band-match (and even a hash
-    * coincidence dies at the exact-Jaccard verify). */
-  private def wmSentinelFixture(s: SparkSession, d: String): String =
-    ensurePhaseFixture(s, d, "sndwm_adv", 1)(
-      s.range(1).select(lit(-1L).as("doc_id"),
-        lit((0 to 6).map(i => s"qqgraftwm$i").mkString(" ")).as("text"),
-        lit(wmT3h).as("ats_ms")))
+  /** The streaming_neardup phases: the doc_id-parity halves of the
+    * arriving side. Each phase is ~defaultParallelism files (r16): the
+    * arrival-side per-row work (shingle HOF + MinHashSig) runs in the
+    * micro-batch's SCAN stage, so a single-file half pinned the whole
+    * signature pass to one task (~1.6 s/batch at sf0.1); one partition per
+    * file is the parallelism a production ingest directory has naturally.
+    * The doc_id hash keeps file contents deterministic (no round-robin). */
+  private def neardupPhases(s: SparkSession, d: String): Seq[Replay.Phase] =
+    Replay.fixture("sneardup", d)(Seq(0, 1).map(parity =>
+      replayDocs(s, d).filter(col("doc_id") % 2 === parity)
+        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))))
 
   /** Driver-contract entry: the arriving side replayed as TWO micro-
     * batches (doc_id parity split) through a real streaming query against
     * the persisted index tables; Complete-mode overwrite sink, read back
-    * lazily (the EventStream.runOnBatch conventions). */
+    * lazily (the `Replay` driver). A doc phase staged as several files
+    * may split across polls; the pair-grain aggregate makes the result
+    * independent of that split. */
   def streamingNeardup(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val corpusIx = s.table(stagedStreamBandIndex(s, d))
-    val outDir = graft.sources.Staging.dir("stream_neardup_out", d)
-    graft.streaming.EventStream.withReplayConf(s) {
-      val staged = java.nio.file.Files.createTempDirectory("graft_sneardup")
-      // stream INPUT lives in its own src/ subtree (the runSplitReplayBody
-      // layout): the checkpoint dir must be a SIBLING of the watched
-      // directory, never inside it — a FileStreamSource config that lists
-      // subdirectories would otherwise pick up offset/commit files as
-      // parquet input mid-run
-      val srcDir = java.nio.file.Files.createDirectory(staged.resolve("src"))
-      // Each half is staged as ~defaultParallelism files (r16): the
-      // arrival-side per-row work (shingle HOF + MinHashSig) runs in the
-      // micro-batch's SCAN stage, so a single-file half pinned the whole
-      // signature pass to one task (~1.6 s/batch at sf0.1). A multi-file
-      // half gives the batch scan one partition per file — the same
-      // parallelism a production ingest directory has naturally. The
-      // doc_id hash keeps file contents deterministic (no round-robin).
-      // r17: the halves are memoized fixtures; arrival is a file copy.
-      copyPhaseInto(neardupHalfFixture(s, d, even = true), srcDir, "docs_b1")
-      val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      // No maxFilesPerTrigger: each processAllAvailable() drains the files
-      // staged so far, so the doc_id-parity phases still replay as
-      // separate micro-batches — phase boundaries are enforced by WHEN the
-      // files appear (the watermarked sibling's move-in pattern), not by a
-      // one-file-per-trigger cap that would serialize the scan.
-      val src = s.readStream.schema(docsSchema).parquet(srcDir.toString)
-      val outFile = new java.io.File(outDir)
-      if (outFile.exists()) graft.sources.Staging.deleteRecursively(outFile)
-      val q = neardupProbe(src, corpusIx).writeStream
-        .outputMode(OutputMode.Complete)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(outDir)
-        }
-        .option("checkpointLocation", staged.resolve("ckpt").toString)
-        .trigger(Trigger.ProcessingTime(0))
-        .start()
-      try {
-        q.processAllAvailable() // phase 1: even doc_ids
-        copyPhaseInto(neardupHalfFixture(s, d, even = false), srcDir, "docs_b2")
-        q.processAllAvailable() // phase 2: odd doc_ids
-      } finally {
-        q.stop()
-        graft.streaming.EventStream.unloadStateStores()
-      }
-      graft.sources.Staging.deleteRecursively(staged.toFile)
-    }
-    s.read.parquet(outDir).orderBy("new_doc", "corpus_doc")
+    Replay.run(s, "stream_neardup_out", d,
+        StructType.fromDDL("doc_id BIGINT, text STRING"),
+        OutputMode.Complete, Replay.BatchSink,
+        neardupPhases(s, d))(neardupProbe(_, corpusIx))
+      .orderBy("new_doc", "corpus_doc")
   }
 
   /** Same unblocked cross-side truth as dedup_incremental. (A def — the
@@ -1282,61 +1193,38 @@ object Dedup {
       .dropDuplicatesWithinWatermark("new_doc", "corpus_doc")
       .select("new_doc", "corpus_doc", "jaccard")
 
-  /** Driver-contract entry: three explicitly ordered micro-batches
-    * (probe docs at T0 → watermark-advancing sentinel at T0+3h → the same
-    * docs replayed at T0+3h) through the Append-mode watermarked probe;
-    * the sink is read back at pair grain with its emission count. */
-  def streamingNeardupWatermarked(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val corpusIx = s.table(stagedStreamBandIndex(s, d))
-    val outDir = graft.sources.Staging.dir("stream_neardup_wm", d)
-    graft.streaming.EventStream.withReplayConf(s) {
-      val staged = java.nio.file.Files.createTempDirectory("graft_sndwm")
-      val srcDir = java.nio.file.Files.createDirectory(staged.resolve("src"))
-      // Doc phases staged as ~defaultParallelism files (r16, the
-      // streaming_neardup rationale: the per-row signature pass runs in
-      // the batch scan stage, so a single-file phase pinned it to one
-      // task — 3.3 s + 2.9 s of the r16-before 10.2 s median); nFiles = 1
-      // keeps the one-row sentinel a single file. Phase boundaries stay
-      // where the files appear; a phase split across polls only splits a
-      // batch, and the pair-key dedup state makes emissions per phase
-      // single regardless of intra-phase batching. r17: every phase's
-      // file set is a memoized fixture (constant timestamps, static doc
-      // set); arrival is a file copy, not a Spark write job.
-      val docsSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("ats_ms",
-          org.apache.spark.sql.types.LongType)))
-      val outFile = new java.io.File(outDir)
-      if (outFile.exists()) graft.sources.Staging.deleteRecursively(outFile)
-      copyPhaseInto(wmDocsFixture(s, d, first = true), srcDir, "docs_p1")
-      // no maxFilesPerTrigger: one poll drains a whole staged phase (the
-      // multi-file scan is the parallelism); phase ORDER is still strict —
-      // each phase is staged only after the previous processAllAvailable
-      val src = s.readStream.schema(docsSchema).parquet(srcDir.toString)
-      val q = neardupProbeWatermarked(src, corpusIx).writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", staged.resolve("ckpt").toString)
-        .trigger(Trigger.ProcessingTime(0))
-        .start()
-      try {
-        q.processAllAvailable() // phase 1: each pair emits once
-        copyPhaseInto(wmSentinelFixture(s, d), srcDir, "advance")
-        q.processAllAvailable() // watermark → T0+2h; pair state expires
-        copyPhaseInto(wmDocsFixture(s, d, first = false), srcDir, "docs_p3")
-        q.processAllAvailable() // state gone → every pair emits again
-      } finally {
-        q.stop()
-        graft.streaming.EventStream.unloadStateStores()
-      }
-      graft.sources.Staging.deleteRecursively(staged.toFile)
+  private val wmT0 = 1700000000000L // fixed epoch; only differences matter
+  private val wmT3h = wmT0 + 3L * 3600000L
+
+  /** The three watermarked-replay phases: every probe doc at T0, the
+    * sentinel at T0+3h, the same docs at T0+3h. Doc phases are
+    * ~defaultParallelism files (the streaming_neardup rationale). The
+    * sentinel is one row of tokens that cannot occur in any document's
+    * text, so it advances the watermark but can never band-match (and
+    * even a hash coincidence dies at the exact-Jaccard verify). */
+  private def wmPhases(s: SparkSession, d: String): Seq[Replay.Phase] =
+    Replay.fixture("sndwm", d) {
+      def docsAt(ms: Long) = replayDocs(s, d).withColumn("ats_ms", lit(ms))
+        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      Seq(docsAt(wmT0),
+        s.range(1).select(lit(-1L).as("doc_id"),
+          lit((0 to 6).map(i => s"qqgraftwm$i").mkString(" ")).as("text"),
+          lit(wmT3h).as("ats_ms")).coalesce(1),
+        docsAt(wmT3h))
     }
-    s.read.parquet(outDir)
+
+  /** Driver-contract entry: three explicitly ordered phases (probe docs at
+    * T0 → watermark-advancing sentinel at T0+3h → the same docs replayed
+    * at T0+3h) through the Append-mode watermarked probe; the sink is read
+    * back at pair grain with its emission count. A doc phase split across
+    * polls only splits a batch: the pair-key dedup state keeps emissions
+    * per phase single. */
+  def streamingNeardupWatermarked(s: SparkSession, d: String): DataFrame = {
+    val corpusIx = s.table(stagedStreamBandIndex(s, d))
+    Replay.run(s, "stream_neardup_wm", d,
+        StructType.fromDDL("doc_id BIGINT, text STRING, ats_ms BIGINT"),
+        OutputMode.Append, Replay.FileSink,
+        wmPhases(s, d))(neardupProbeWatermarked(_, corpusIx))
       .groupBy("new_doc", "corpus_doc")
       .agg(count(lit(1)).as("n_emits"), min("jaccard").as("jaccard"))
       .orderBy("new_doc", "corpus_doc")
@@ -2384,11 +2272,9 @@ object Dedup {
     stagedShingles(s, d); stagedSignatures(s, d); stagedEmbCells(s, d)
     stagedCorpusBandIndex(s, d); stagedCorpusShingleSets(s, d)
     stagedStreamBandIndex(s, d); stagedStride1Windows(s, d)
-    // replay-source phase fixtures (r17): the same defs the replay
-    // queries call, so registry and query can never drift
-    neardupHalfFixture(s, d, even = true); neardupHalfFixture(s, d, even = false)
-    wmDocsFixture(s, d, first = true); wmDocsFixture(s, d, first = false)
-    wmSentinelFixture(s, d)
+    // replay phase fixtures (r17): the same defs the replay queries
+    // call, so registry and query can never drift
+    neardupPhases(s, d); wmPhases(s, d)
     ()
   }
 

@@ -174,11 +174,11 @@ object Staging {
 
   // -------------------------------------------------------------------
   // Staged /tmp FIXTURES that are pure functions of a static dataset
-  // (corrupt-JSONL intake fixtures): re-writing them on every query call
-  // paid the full serialize cost per bench run. Same per-JVM future
-  // latch + self-healing existence check as ensureDir. NOT for fixtures
-  // a harness deletes after use (the streaming split-replay trees) —
-  // those are intentionally per-call.
+  // (corrupt-JSONL intake fixtures, streaming replay phases): re-writing
+  // them on every query call paid the full serialize cost per bench run.
+  // Same per-JVM future latch + self-healing existence check as
+  // ensureDir. NOT for a streaming replay's own tree (its checkpoint):
+  // that is per-call, since a checkpoint can't be reused across runs.
   // -------------------------------------------------------------------
 
   private val stagedFixtures = new java.util.concurrent.ConcurrentHashMap[

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.OracleSql
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming operators over the events stream.
@@ -17,78 +17,11 @@ import org.apache.spark.sql.types._
   *
   * At scale: state is partitioned by the group key (user_id) across
   * executors; the watermark bounds state size — without it a 100 TB stream
-  * accumulates state forever. `runOnBatch` replays the parquet table through
-  * a real streaming query (Trigger.AvailableNow semantics via
-  * processAllAvailable) so batch/stream parity is testable.
+  * accumulates state forever. Every query here replays its input through
+  * a real streaming query with `Replay`, so batch/stream parity is
+  * testable.
   */
 object EventStream {
-
-  /** Unload every loaded state-store provider (local mode: the executors
-    * share this JVM). A stopped replay-harness query leaves its providers —
-    * 32 shuffle partitions × up to 4 stores for a stream-stream join —
-    * registered with their in-memory version maps until the 60 s
-    * maintenance tick notices the query is inactive; back-to-back harness
-    * runs in one JVM (the bench's median-of-N, the full Verify dump)
-    * accumulate those maps and slow every successive stateful query
-    * (measured: streaming_join_outer 15 s → 50 s across 5 consecutive
-    * runs in one JVM). Unloading right after stop() is deterministic and
-    * safe: the harness runs queries sequentially, and an active query that
-    * lost a provider would merely reload it from its checkpoint on the
-    * next batch. */
-  private[graft] def unloadStateStores(): Unit =
-    org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
-
-  /** State-store backend rung: every streaming query here runs on the
-    * default HDFS-backed in-memory provider OR on RocksDB, flipped by ONE
-    * session flag, `spark.graft.stateStore` = `hdfs` (default) |
-    * `rocksdb`. At 100 TB the production backend is RocksDB — state
-    * (session windows, join buffers, KMV sketches) lives off-heap on local
-    * SSD instead of in executor heap snapshots, so state size is bounded
-    * by disk, not memory.
-    * StreamingSpec proves backend parity (same results both rungs); the
-    * provider is read from SQLConf at query start, so setting it here
-    * applies per started query, never retroactively. */
-  private[graft] def applyStateStore(s: SparkSession): Unit = {
-    val choice = s.conf.getOption("spark.graft.stateStore").getOrElse("hdfs")
-    val provider =
-      if (choice.equalsIgnoreCase("rocksdb"))
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      else
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    s.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-  }
-
-  /** Stateful-stream partition sizing, a FIRST-RUN production decision:
-    * `spark.sql.shuffle.partitions` at the first micro-batch permanently
-    * pins the state layout in the checkpoint (Spark cannot re-partition
-    * existing state), so it must be chosen for the STATE's target volume,
-    * not inherited from the batch-relational default — which is sized for
-    * data-grain shuffles and, for a stream-stream join, costs
-    * partitions × 4 state-store instances of per-batch snapshot/commit
-    * I/O whether or not they hold state. The replay harness's state at
-    * test SF is kilobytes, so it runs its streaming queries at a small
-    * count (default 8; `SPARK_GRAFT_STREAM_STATE_PARTITIONS` overrides —
-    * a 100 TB deployment with executor-count parallelism and real state
-    * volume sets hundreds+) and restores the session's batch setting
-    * afterwards. Measured on the heaviest harness query
-    * (streaming_join_outer, two phases × 4 stores): 18.5 s at 32
-    * partitions → 6.9 s at 8, identical output. Single-threaded harness:
-    * the set/restore never races a concurrent planner. */
-  private[graft] def withReplayConf[T](s: SparkSession)(body: => T): T = {
-    applyStateStore(s)
-    val key = "spark.sql.shuffle.partitions"
-    val saved = s.conf.get(key)
-    // fail AT the override site with the variable's name — an invalid
-    // value passed through to Spark planning surfaces as an opaque error
-    val n = sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS").map { v =>
-      val p = v.trim.toIntOption.getOrElse(-1)
-      require(p > 0, s"SPARK_GRAFT_STREAM_STATE_PARTITIONS must be a " +
-        s"positive integer, got '$v'")
-      p
-    }.getOrElse(8)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, saved)
-  }
 
   /** events schema when TIMESTAMP(NANOS) is read as a raw long (see
     * Tables.events). */
@@ -211,7 +144,7 @@ object EventStream {
     * aggregations. */
   def streamingFunnel(s: SparkSession, dir: String): DataFrame = {
     val frontier = runOnBatch(s, dir, df => funnelFrontiers(df).toDF(),
-      s"stream_funnel_${System.nanoTime()}", OutputMode.Update)
+      "stream_funnel", OutputMode.Update)
     // latest frontier per user = min of emitted non-negative values (the
     // frontiers only move down once set); null ⇒ stage never reached
     val last = frontier.groupBy("user_id").agg(
@@ -295,7 +228,7 @@ object EventStream {
     * oracled against the SAME SQL (6th oracled streaming query). */
   def streamingAttribution(s: SparkSession, dir: String): DataFrame = {
     val purchases = runOnBatch(s, dir, df => attributionMachine(df).toDF(),
-      s"stream_attr_${System.nanoTime()}", OutputMode.Append)
+      "stream_attr", OutputMode.Append)
     purchases.groupBy("channel")
       .agg(count(lit(1)).as("n_purchases"),
         round(sum("value"), 2).as("revenue"),
@@ -332,7 +265,7 @@ object EventStream {
     * emit eagerly per micro-batch (the watermark only bounds and GCs join
     * state), so the finite replay emits every pair. */
   def streamingJoin(s: SparkSession, dir: String): DataFrame =
-    runOnBatch(s, dir, clickPurchaseJoin, s"stream_join_${System.nanoTime()}",
+    runOnBatch(s, dir, clickPurchaseJoin, "stream_join",
       OutputMode.Append)
       .orderBy("purchase_id", "click_id")
 
@@ -376,103 +309,45 @@ object EventStream {
         coalesce(unix_millis(col("cts")), lit(-1L)).as("click_ms"))
   }
 
-  /** Two-phase replay for the outer join: phase 1 streams the real events;
-    * phase 2 delivers two far-future SENTINEL rows (a purchase for user −1
-    * and a click for user −2 — they advance both sides' watermarks without
-    * matching anything) so the watermark passes EVERY real purchase's
-    * join-window expiry and all retained outer state flushes. The oracle
-    * is then the clean batch LEFT JOIN over the real events — no
-    * watermark-boundary case analysis left in the contract. The sentinel
-    * purchase itself never flushes (the watermark cannot pass its own
-    * expiry), so it does not appear in the output.
-    *
-    * Unlike the aggregate-output streaming queries (bounded memory-sink
-    * results), this output is MATCH-GRAIN — so the sink is a FILES sink
-    * (parquet + checkpoint), never a driver-resident memory table: the
-    * result flows executor→files→scan without ever sitting on the driver,
-    * exactly as a production deployment would run it. The output dir is
-    * deterministic per dataset and overwritten per call. */
-  /** The harness-staging half of streamingJoinOuter, split out so the
-    * scale harness (ScaleSmoke) can measure staging vs stream-replay cost
-    * separately (the ivfpq build/search split pattern): normalize events
-    * into the replay dir as batch 1 and write the far-future watermark
-    * sentinel as the (initially hidden) batch 2. Returns (replay dir,
-    * sentinel file to move in as phase 2). */
-  /** The far-future watermark sentinel memoized as a fixture (r17 — the
-    * events_norm precedent): its two rows are a pure function of the
-    * static events table (max ts + 10 h), so the max-aggregate job and
-    * the tiny parquet write every call used to pay happen once per JVM
-    * (Bench's registry pre-stages it untimed). */
-  private[graft] def ensureOuterSentinelFixture(
-      s: SparkSession, dir: String): String =
-    graft.sources.Staging.ensureFixture("outer_sentinel", dir) { path =>
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val maxNs = graft.Tables.events(s, dir).agg(max("ts")).head().getLong(0)
-      val farNs = maxNs + 10L * 3600L * 1000000000L
-      val tmp = path + "_tmp"
-      s.createDataFrame(
+  /** The normalized events table as one replay phase of one file: the
+    * physical ts type of the source parquet varies across testdata
+    * generations (see Tables.events), and the stream reads the long-ns
+    * `eventsSchema`. */
+  private[graft] def eventsPhase(s: SparkSession, dir: String): Replay.Phase =
+    Replay.fixture("events_norm", dir)(Seq(graft.Tables.events(s, dir).coalesce(1))).head
+
+  /** The far-future watermark sentinel as one replay phase: a purchase for
+    * user −1 and a click for user −2 at max ts + 10 h. They advance both
+    * join sides' watermarks without matching anything. */
+  private[graft] def outerSentinelPhase(s: SparkSession, dir: String): Replay.Phase =
+    Replay.fixture("outer_sentinel", dir) {
+      val farNs = graft.Tables.events(s, dir).agg(max("ts")).head().getLong(0) +
+        10L * 3600L * 1000000000L
+      Seq(s.createDataFrame(
           java.util.Arrays.asList(
             org.apache.spark.sql.Row(-1L, farNs, -1L, "purchase", 0.0, "{}"),
             org.apache.spark.sql.Row(-2L, farNs, -2L, "click", 0.0, "{}")),
           eventsSchema)
-        .coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head.toPath
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
-      java.nio.file.Files.move(part, java.nio.file.Paths.get(path, "sent.parquet"))
-      val t = new java.io.File(tmp)
-      t.listFiles().foreach(_.delete()); t.delete()
-    }
+        .coalesce(1))
+    }.head
 
-  private[graft] def stageJoinOuterInputs(
-      s: SparkSession, dir: String): (java.nio.file.Path, java.nio.file.Path) = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val staged = java.nio.file.Files.createTempDirectory("graft_outer")
-    // stage a NORMALIZED copy (Tables.events converts ts to long nanos
-    // whatever the physical parquet type) so the readStream schema below
-    // is always the long-ns eventsSchema
-    stageNormalized(s, dir, staged, "events_b1.parquet")
-    // the sentinel waits OUTSIDE the watched root (sent/) until phase 2
-    // moves it in — exactly the pre-fixture layout
-    val sentDir = java.nio.file.Files.createDirectory(staged.resolve("sent"))
-    val sentFile = sentDir.resolve("sent.parquet")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(ensureOuterSentinelFixture(s, dir), "sent.parquet"),
-      sentFile)
-    (staged, sentFile)
-  }
+  /** The staging half of streamingJoinOuter, split out so ScaleSmoke can
+    * measure staging and replay cost separately. */
+  private[graft] def joinOuterPhases(s: SparkSession, dir: String): Seq[Replay.Phase] =
+    Seq(eventsPhase(s, dir), outerSentinelPhase(s, dir))
 
-  def streamingJoinOuter(s: SparkSession, dir: String): DataFrame = {
-    // withReplayConf is generic in T: the block RETURNS the out dir it
-    // wrote, so the read-back below targets the same path even if
-    // Staging.dir ever gains per-call uniqueness.
-    val outDir = withReplayConf(s) {
-      val (staged, sentFile) = stageJoinOuterInputs(s, dir)
-      val src = s.readStream
-        .schema(eventsSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
-      val outDir = graft.sources.Staging.dir("stream_outer_out", dir)
-      val outFile = new java.io.File(outDir)
-      if (outFile.exists()) graft.sources.Staging.deleteRecursively(outFile)
-      val q = leftOuterClickPurchase(src).writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", staged.resolve("ckpt").toString)
-        .trigger(Trigger.ProcessingTime(0))
-        .start()
-      try {
-        q.processAllAvailable() // phase 1: inner matches emit
-        java.nio.file.Files.move(sentFile, staged.resolve("events_b2.parquet"))
-        q.processAllAvailable() // phase 2: watermark jump flushes outer state
-      } finally { q.stop(); unloadStateStores() }
-      graft.sources.Staging.deleteRecursively(staged.toFile)
-      outDir
-    }
-    s.read.parquet(outDir)
+  /** Two-phase replay for the outer join: phase 1 streams the real events;
+    * phase 2 delivers the sentinel, so the watermark passes EVERY real
+    * purchase's join-window expiry and all retained outer state flushes.
+    * The oracle is then the clean batch LEFT JOIN over the real events —
+    * no watermark-boundary case analysis left in the contract. The
+    * sentinel purchase itself never flushes (the watermark cannot pass its
+    * own expiry), so it does not appear in the output. The output is
+    * MATCH-GRAIN, so it goes to the parquet file sink. */
+  def streamingJoinOuter(s: SparkSession, dir: String): DataFrame =
+    Replay.run(s, "stream_outer_out", dir, eventsSchema, OutputMode.Append,
+        Replay.FileSink, joinOuterPhases(s, dir))(leftOuterClickPurchase)
       .filter(col("purchase_id") >= 0).orderBy("purchase_id", "click_id")
-  }
 
   /** Batch restatement: the full LEFT interval join over the real events —
     * every unmatched purchase appears exactly once with -1 click columns,
@@ -492,120 +367,30 @@ object EventStream {
       |WHERE p.event_type = 'purchase'
       |ORDER BY purchase_id, click_id""".stripMargin
 
-  /** Replay a parquet events table through a real streaming query into a
-    * memory sink; returns the sink contents as a DataFrame.
-    *
-    * The memory sink + collect is the FINITE-REPLAY PARITY HARNESS only
-    * (bounded by the sink's aggregated output, which Verify collects for
-    * every query anyway). A production deployment writes the same `build`
-    * pipeline to a files sink or foreachBatch — nothing upstream of the
-    * sink changes. */
-  /** Write one long-ns-normalized single-file copy of the events table into
-    * `staged/<name>` (FileStreamSource needs a directory of files, and the
-    * physical ts type of the source parquet varies across testdata
-    * generations — see Tables.events).
-    *
-    * The normalized file is a pure function of the static events table, so
-    * it is staged ONCE per JVM (Staging.ensureFixture — the quarantine
-    * memoization precedent) and each per-call replay tree takes a
-    * filesystem COPY of it: the Spark normalize+write job that every
-    * replay-harness streaming query used to pay per CALL becomes a
-    * millisecond file copy. The per-call trees themselves stay per-call —
-    * checkpoints can't be reused across runs. */
-  /** The memoized normalized-events fixture alone — split out so Bench's
-    * pre-stage registry (graft.Layouts) can stage it directly. */
-  private[graft] def ensureNormalizedFixture(
-      s: SparkSession, dir: String): String =
-    graft.sources.Staging.ensureFixture("events_norm", dir) { path =>
-      val tmp = path + "_tmp"
-      graft.Tables.events(s, dir).coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head.toPath
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
-      java.nio.file.Files.move(part, java.nio.file.Paths.get(path, "events.parquet"))
-      val d = new java.io.File(tmp)
-      d.listFiles().foreach(_.delete()); d.delete()
-    }
-
-  private def stageNormalized(
-      s: SparkSession, dir: String,
-      staged: java.nio.file.Path, name: String): Unit = {
-    val fixture = ensureNormalizedFixture(s, dir)
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(fixture, "events.parquet"), staged.resolve(name))
-    ()
-  }
-
+  /** Replay the events table through a real streaming query as one phase
+    * into a foreachBatch sink; returns the output, read back lazily. */
   def runOnBatch(
       s: SparkSession,
       dir: String,
       build: DataFrame => DataFrame,
-      queryName: String,
-      mode: OutputMode = OutputMode.Append): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val outDir = graft.sources.Staging.dir(
-      "stream_out_" + queryName.replaceAll("_\\d+$", ""), dir)
-    withReplayConf(s) {
-      // FileStreamSource needs a DIRECTORY; the sf dir has one file per
-      // table, so stage events.parquet into a temp dir. One file = one
-      // micro-batch, which also means no cross-batch late data to fight
-      // the watermark.
-      val staged = java.nio.file.Files.createTempDirectory("graft_stream")
-      stageNormalized(s, dir, staged, "events.parquet")
-      val src = s.readStream
-        .schema(eventsSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
-      // foreachBatch + executor-side parquet write, NOT a memory sink: the
-      // memory sink funnels every output row through the driver, which is
-      // exactly the collect() anti-pattern at 100 TB. Complete mode can't
-      // use the parquet FILE sink (append-only), so each batch OVERWRITES
-      // the output dir with the sink's latest full answer (Complete
-      // re-emits the full table every trigger, INCLUDING the final no-data
-      // watermark batch, so overwrite is safe); Append/Update emit
-      // incrementally, so their batches APPEND — an overwrite would let the
-      // final empty watermark batch wipe the real output. The out dir is
-      // per-query-kind stable (nanoTime suffix stripped), so repeated calls
-      // in a long session overwrite instead of accumulating.
-      val outFile = new java.io.File(outDir)
-      if (outFile.exists()) graft.sources.Staging.deleteRecursively(outFile)
-      val saveMode =
-        if (mode == OutputMode.Complete()) "overwrite" else "append"
-      val q = build(src).writeStream
-        .outputMode(mode)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode(saveMode).parquet(outDir)
-        }
-        .option("checkpointLocation", staged.resolve("ckpt").toString)
-        .trigger(Trigger.ProcessingTime(0))
-        .start()
-      try {
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        unloadStateStores()
-      }
-      // release the staged input copy + checkpoint; the parquet output
-      // stays (stable path, overwritten next call) and is read back LAZILY
-      graft.sources.Staging.deleteRecursively(staged.toFile)
-    }
-    s.read.parquet(outDir)
-  }
+      tag: String,
+      mode: OutputMode = OutputMode.Append): DataFrame =
+    Replay.run(s, "stream_out_" + tag, dir, eventsSchema, mode, Replay.BatchSink,
+      Seq(eventsPhase(s, dir)))(build)
 
   /** Checkpoint-recovery replay harness (spec-driven): the property
     * checkpoints exist for, which batch parity and backend parity never
-    * exercise. The events table is split into two ts-halves staged as two
-    * source files. `interrupted = true` processes file 1, STOPS the query
+    * exercise. The events table is split into two ts-halves, one file and
+    * one phase each. `interrupted = true` drains phase 1, STOPS the query
     * (the crash stand-in), then starts a NEW query from the SAME
-    * checkpoint to process file 2 — source offsets, aggregate/session
+    * checkpoint to drain phase 2 — source offsets, aggregate/session
     * state, and sink commits must all resume exactly. `interrupted =
-    * false` replays both files through one uninterrupted query with the
-    * same one-file-per-trigger batch boundaries. Equality of the two
-    * final outputs proves the recovery: losing state at the restart would
-    * split every session/window spanning the mid-point. Complete-mode
-    * overwrite sink, so the final emission is the full answer in both
-    * arms (the runOnBatch convention). Returns sorted row renderings —
-    * the staging tree (including the output) is deleted before return.
+    * false` replays both phases through one uninterrupted query with the
+    * same batch boundaries. Equality of the two final outputs proves the
+    * recovery: losing state at the restart would split every
+    * session/window spanning the mid-point. Complete-mode overwrite sink,
+    * so the final emission is the full answer in both arms. Returns sorted
+    * row renderings.
     *
     * `crashMidBatch = true` hardens the crash stand-in from a clean stop
     * at a batch boundary to a failure INSIDE a micro-batch: the second
@@ -613,89 +398,24 @@ object EventStream {
     * batch's offsets are in the offset log but its commit never lands, so
     * the restart must REPLAY the batch against the previous state version
     * and the idempotent overwrite sink must absorb the duplicate emission
-    * (the exactly-once contract). The harness self-asserts the planted
-    * crash actually fired. */
+    * (the exactly-once contract). Replay self-asserts the planted crash
+    * actually fired. */
   private[graft] def runSplitReplay(
       s: SparkSession, dir: String, build: DataFrame => DataFrame,
       interrupted: Boolean, crashMidBatch: Boolean = false): Seq[String] = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    withReplayConf(s) { runSplitReplayBody(s, dir, build, interrupted, crashMidBatch) }
-  }
-
-  private def runSplitReplayBody(
-      s: SparkSession, dir: String, build: DataFrame => DataFrame,
-      interrupted: Boolean, crashMidBatch: Boolean): Seq[String] = {
-    val staged = java.nio.file.Files.createTempDirectory("graft_ckpt")
-    val srcDir = staged.resolve("src")
-    java.nio.file.Files.createDirectories(srcDir)
-    val ev = graft.Tables.events(s, dir)
-    val mm = ev.agg(min("ts"), max("ts")).head()
-    val mid = (mm.getLong(0) + mm.getLong(1)) / 2
-    def writeHalf(pred: org.apache.spark.sql.Column, name: String,
-        into: java.nio.file.Path): Unit = {
-      val tmp = staged.resolve(name + "_tmp").toString
-      ev.filter(pred).coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head.toPath
-      java.nio.file.Files.move(part, into.resolve(name))
-      val dtmp = new java.io.File(tmp)
-      dtmp.listFiles().foreach(_.delete()); dtmp.delete()
+    val halves = Replay.fixture("stream_split", dir) {
+      val ev = graft.Tables.events(s, dir)
+      val mm = ev.agg(min("ts"), max("ts")).head()
+      val mid = (mm.getLong(0) + mm.getLong(1)) / 2
+      Seq(ev.filter(col("ts") <= mid).coalesce(1), ev.filter(col("ts") > mid).coalesce(1))
     }
-    writeHalf(col("ts") <= mid, "b1.parquet", srcDir)
-    writeHalf(col("ts") > mid, "b2.parquet", staged) // hidden until phase 2
-    val outDir = staged.resolve("out").toString
-    def start(crash: Option[java.util.concurrent.atomic.AtomicBoolean]) = {
-      val src = s.readStream.schema(eventsSchema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
-      build(src).writeStream
-        .outputMode(OutputMode.Complete)
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          b.write.mode("overwrite").parquet(outDir)
-          // planted mid-batch crash: the sink has WRITTEN but the batch's
-          // commit-log entry will never land — the restart must replay
-          if (id >= 1 && crash.exists(_.compareAndSet(false, true)))
-            throw new RuntimeException("planted mid-batch crash (spec)")
-        }
-        .option("checkpointLocation", staged.resolve("ckpt").toString)
-        .trigger(Trigger.ProcessingTime(0))
-        .start()
-    }
-    def revealB2(): Unit = java.nio.file.Files.move(
-      staged.resolve("b2.parquet"), srcDir.resolve("b2.parquet"))
-    if (crashMidBatch) {
-      revealB2()
-      val planted = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val q1 = start(Some(planted))
-      // the planted crash is EXPECTED to kill the query; capture whatever
-      // processAllAvailable throws so a genuine unrelated batch-0 failure
-      // resurfaces as itself instead of as the "never fired" message
-      var phase1Failure: Throwable = null
-      try q1.processAllAvailable()
-      catch { case t: Throwable => phase1Failure = t }
-      finally if (q1.isActive) q1.stop()
-      if (!planted.get)
-        throw Option(phase1Failure).getOrElse(new IllegalStateException(
-          "planted mid-batch crash never fired — batch boundaries changed?"))
-      val q2 = start(None)
-      try q2.processAllAvailable() finally q2.stop()
-    } else if (interrupted) {
-      val q1 = start(None)
-      try q1.processAllAvailable() finally q1.stop()
-      revealB2()
-      val q2 = start(None)
-      try q2.processAllAvailable() finally q2.stop()
-    } else {
-      revealB2()
-      val q = start(None)
-      try q.processAllAvailable() finally q.stop()
-    }
-    val rows = s.read.parquet(outDir).collect()
-      .map(_.toString).sorted.toSeq
-    graft.sources.Staging.deleteRecursively(staged.toFile)
-    // after BOTH phases: mid-replay the checkpoint hand-off q1 → q2 must
-    // keep q1's providers loadable, so the unload waits until the end
-    unloadStateStores()
-    rows
+    val starts =
+      if (crashMidBatch) Seq(Replay.Start(halves, crashAfter = Some(1L)), Replay.Start(Seq(Nil)))
+      else if (interrupted) halves.map(h => Replay.Start(Seq(h)))
+      else Seq(Replay.Start(halves))
+    Replay.restarts(s, "stream_split_out", dir, eventsSchema, OutputMode.Complete,
+        Replay.BatchSink, starts)(build)
+      .collect().map(_.toString).sorted.toSeq
   }
 
   case class CdcFeed(doc_id: Long, op: String, h2: String)
@@ -737,6 +457,23 @@ object EventStream {
       }
   }
 
+  /** The CDC feed (I/U/D ops over documents) as 3 files, one phase each:
+    * 3 genuine micro-batches. */
+  private[graft] def cdcPhases(s: SparkSession, dir: String): Seq[Replay.Phase] =
+    Replay.fixture("stream_cdc_feed", dir) {
+      val docs = graft.Tables.documents(s, dir)
+      val v2hash = md5(when(col("doc_id") % 7 === 2, concat(col("text"), lit(" rev2")))
+        .otherwise(col("text")))
+      Seq(docs
+        .withColumn("op",
+          when(col("doc_id") % 13 === 5 && col("doc_id") % 17 =!= 3, lit("D"))
+            .when(col("doc_id") % 17 === 3 && col("doc_id") % 13 =!= 5, lit("I"))
+            .when(col("doc_id") % 7 === 2, lit("U")))
+        .filter(col("op").isNotNull)
+        .select(col("doc_id"), col("op"), v2hash.as("h2"))
+        .repartition(3))
+    }.flatten.map(Seq(_))
+
   /** Driver-contract entry: the corpus_upsert_merge CDC feed replayed as a
     * real multi-batch stream (the feed is staged as 3 parquet files =
     * 3 micro-batches) over snapshot-bootstrapped state, then assembled into
@@ -746,46 +483,14 @@ object EventStream {
     * like a CDC sink. */
   def streamingCdcUpsert(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docs = graft.Tables.documents(s, dir)
-    val base = docs.filter(col("doc_id") % 17 =!= 3)
+    val base = graft.Tables.documents(s, dir).filter(col("doc_id") % 17 =!= 3)
       .select(col("doc_id"), md5(col("text")).as("h"))
-    val v2hash = md5(when(col("doc_id") % 7 === 2, concat(col("text"), lit(" rev2")))
-      .otherwise(col("text")))
-    val feed = docs
-      .withColumn("op",
-        when(col("doc_id") % 13 === 5 && col("doc_id") % 17 =!= 3, lit("D"))
-          .when(col("doc_id") % 17 === 3 && col("doc_id") % 13 =!= 5, lit("I"))
-          .when(col("doc_id") % 7 === 2, lit("U")))
-      .filter(col("op").isNotNull)
-      .select(col("doc_id"), col("op"), v2hash.as("h2"))
     val initial = base.as[(Long, String)].map { case (id, h) => (id, CdcSnap(h)) }
-    // stage the feed as 3 files → 3 genuine micro-batches
-    val staged = java.nio.file.Files.createTempDirectory("graft_cdc")
-    feed.repartition(3).write.mode("overwrite").parquet(staged.toString)
-    val src = s.readStream
-      .schema(StructType(Seq(
-        StructField("doc_id", LongType), StructField("op", StringType),
-        StructField("h2", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged.toString)
-    // parquet FILE sink (append across the 3 micro-batches), the
-    // streaming_join_outer materialization path: the emitted key-grain
-    // post-images land executor-side, never through a driver memory sink
-    val outDir = graft.sources.Staging.dir("stream_cdc_out", dir)
-    val outFile = new java.io.File(outDir)
-    if (outFile.exists()) graft.sources.Staging.deleteRecursively(outFile)
-    withReplayConf(s) {
-      val q = cdcApply(src, initial).toDF().writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", staged.resolve("ckpt").toString)
-        .trigger(Trigger.ProcessingTime(0))
-        .start()
-      try q.processAllAvailable() finally { q.stop(); unloadStateStores() }
-    }
-    val emitted = s.read.parquet(outDir)
-    graft.sources.Staging.deleteRecursively(staged.toFile)
+    // parquet FILE sink: the emitted key-grain post-images land
+    // executor-side, never through a driver memory sink
+    val emitted = Replay.run(s, "stream_cdc_out", dir,
+        StructType.fromDDL("doc_id BIGINT, op STRING, h2 STRING"), OutputMode.Append,
+        Replay.FileSink, cdcPhases(s, dir))(src => cdcApply(src, initial).toDF())
     // CDC-sink assembly: emitted post-images override, deletes drop,
     // untouched base rows pass through as rev 0
     base.join(emitted, Seq("doc_id"), "full_outer")
@@ -841,7 +546,7 @@ object EventStream {
   def streamingDedup(s: SparkSession, dir: String): DataFrame =
     // Complete mode: the finite replay must emit counts for keys still
     // inside the watermark horizon too
-    runOnBatch(s, dir, dedupCountsByType, s"stream_dedup_${System.nanoTime()}",
+    runOnBatch(s, dir, dedupCountsByType, "stream_dedup",
       OutputMode.Complete)
       .orderBy("event_type")
 
@@ -872,7 +577,7 @@ object EventStream {
 
   /** Driver-contract entry: watermarked streaming tumbling aggregation. */
   def streamingTumbling(s: SparkSession, dir: String): DataFrame =
-    runOnBatch(s, dir, tumblingCountsByType, s"stream_tumb_${System.nanoTime()}",
+    runOnBatch(s, dir, tumblingCountsByType, "stream_tumb",
       OutputMode.Complete)
       .orderBy("hour_ms", "event_type")
 
@@ -910,7 +615,7 @@ object EventStream {
   /** Driver-contract entry: the streaming sketch aggregate (12th oracled
     * streaming query). */
   def streamingKmv(s: SparkSession, dir: String): DataFrame =
-    runOnBatch(s, dir, kmvUsersByWindow, s"stream_kmv_${System.nanoTime()}",
+    runOnBatch(s, dir, kmvUsersByWindow, "stream_kmv",
       OutputMode.Complete)
       .orderBy("win_ms")
 
@@ -959,7 +664,7 @@ object EventStream {
     * oracled against the same replicate-by-offset SQL as the batch
     * q_events_hopping (7th oracled streaming query). */
   def streamingHopping(s: SparkSession, dir: String): DataFrame =
-    runOnBatch(s, dir, hoppingCountsByType, s"stream_hop_${System.nanoTime()}",
+    runOnBatch(s, dir, hoppingCountsByType, "stream_hop",
       OutputMode.Complete)
       .orderBy("win_ms", "event_type")
 
@@ -985,7 +690,7 @@ object EventStream {
   def streamingSessionize(s: SparkSession, dir: String): DataFrame =
     // Complete mode: a finite replay must emit sessions still inside the
     // watermark horizon too (Append would hold the last ~10 min in state)
-    runOnBatch(s, dir, df => sessionWindowAgg(df), s"stream_sess_${System.nanoTime()}",
+    runOnBatch(s, dir, df => sessionWindowAgg(df), "stream_sess",
       OutputMode.Complete)
       .orderBy("user_id", "start_ms")
 
@@ -1035,7 +740,7 @@ object EventStream {
         .groupBy("tier", "event_type")
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 100).cast("long")).as("val_cents")),
-      s"stream_enrich_${System.nanoTime()}",
+      "stream_enrich",
       OutputMode.Complete)
       .orderBy("tier", "event_type")
   }
@@ -1067,63 +772,35 @@ object EventStream {
       .select(unix_millis(col("window.start")).as("win_ms"), col("event_type"),
         col("n"), col("val_cents"))
 
+  /** The late-drop phases: the events within 2 h of the global max, then
+    * every older event, one file each. */
+  private[graft] def latePhases(s: SparkSession, dir: String): Seq[Replay.Phase] =
+    Replay.fixture("stream_late", dir) {
+      val nsMs = graft.functions.TimeFunctions.nsToMs("ts")
+      val ev = graft.Tables.events(s, dir)
+      val cut = ev.agg(max(nsMs)).head().getLong(0) - 2L * 3600000L
+      Seq(ev.filter(nsMs >= cut).coalesce(1), ev.filter(nsMs < cut).coalesce(1))
+    }
+
   /** WATERMARK LATE-DATA SEMANTICS — the one core streaming behavior the
     * other eight queries don't isolate: rows arriving after the watermark
-    * passed their window are DROPPED, not merged. Two explicitly ordered
-    * micro-batches (file written → processAllAvailable → next file):
-    * batch 1 carries every event within 2 h of the global max M, advancing
-    * the watermark to M−1h at its end; batch 2 replays everything older
-    * than M−2h — all of it beyond the watermark horizon, so the state
-    * store must discard every row. The append-mode output therefore holds
-    * ONLY batch-1 windows finalized below the watermark; if late rows
-    * leaked in they would CREATE already-expired old windows and emit them
-    * immediately, so any leak is visible as extra output rows. The oracle
-    * recomputes exactly "batch-1 rows, windows closed at or below M−1h" in
-    * SQL — batch/stream parity on the drop rule itself. At scale this is
-    * the knob that bounds state: without the watermark the 100 TB stream's
-    * window state grows forever. */
-  def streamingLateDrop(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val nsMs = graft.functions.TimeFunctions.nsToMs("ts")
-    val ev = graft.Tables.events(s, dir)
-    val msMax = ev.agg(max(nsMs)).head().getLong(0) // bounded driver scalar
-    val cut = msMax - 2L * 3600000L
-    val staged = java.nio.file.Files.createTempDirectory("graft_late")
-    val b1Dir = staged.resolve("b1").toString
-    val b2Dir = staged.resolve("b2").toString
-    ev.filter(nsMs >= cut).coalesce(1).write.parquet(b1Dir)
-    ev.filter(nsMs < cut).coalesce(1).write.parquet(b2Dir)
-    def firstPart(d: String) = new java.io.File(d).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head.toPath
-    // phase 1: only batch 1 is visible when the stream starts
-    java.nio.file.Files.move(firstPart(b1Dir), staged.resolve("events_b1.parquet"))
-    val src = s.readStream
-      .schema(eventsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged.toString)
-    // parquet FILE sink (append-mode windowed agg), the
-    // streaming_join_outer materialization path — no driver memory sink
-    val outDir = graft.sources.Staging.dir("stream_late_out", dir)
-    val outFile = new java.io.File(outDir)
-    if (outFile.exists()) graft.sources.Staging.deleteRecursively(outFile)
-    withReplayConf(s) {
-      val q = lateDropAgg(src).writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", staged.resolve("ckpt").toString)
-        .trigger(Trigger.ProcessingTime(0))
-        .start()
-      try {
-        q.processAllAvailable() // batch 1 fully processed; watermark = M−1h
-        // phase 2: the late file arrives AFTER the watermark advanced
-        java.nio.file.Files.move(firstPart(b2Dir), staged.resolve("events_b2.parquet"))
-        q.processAllAvailable()
-      } finally { q.stop(); unloadStateStores() }
-    }
-    graft.sources.Staging.deleteRecursively(staged.toFile)
-    s.read.parquet(outDir).orderBy("win_ms", "event_type")
-  }
+    * passed their window are DROPPED, not merged. Two phases, so two
+    * explicitly ordered micro-batches: batch 1 carries every event within
+    * 2 h of the global max M, advancing the watermark to M−1h at its end;
+    * batch 2 replays everything older than M−2h — all of it beyond the
+    * watermark horizon, so the state store must discard every row. The
+    * append-mode output therefore holds ONLY batch-1 windows finalized
+    * below the watermark; if late rows leaked in they would CREATE
+    * already-expired old windows and emit them immediately, so any leak is
+    * visible as extra output rows. The oracle recomputes exactly "batch-1
+    * rows, windows closed at or below M−1h" in SQL — batch/stream parity
+    * on the drop rule itself. At scale this is the knob that bounds state:
+    * without the watermark the 100 TB stream's window state grows forever.
+    * Parquet file sink (append-mode windowed agg). */
+  def streamingLateDrop(s: SparkSession, dir: String): DataFrame =
+    Replay.run(s, "stream_late_out", dir, eventsSchema, OutputMode.Append,
+        Replay.FileSink, latePhases(s, dir))(lateDropAgg)
+      .orderBy("win_ms", "event_type")
 
   /** Batch restatement of the drop rule: batch-1 rows only (within 2 h of
     * the max), windows whose end is at or below the final watermark M−1h. */

@@ -6,9 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
 
 /** Shared local session for all suites (one JVM-wide session, lazy): the
-  * library's own session shape (GraftSession), at local[4]. */
+  * library's own session shape (GraftSession), at local[4]. Its staged
+  * tables land in a per-run warehouse, deleted when the JVM exits. */
 object SparkSpec {
-  lazy val spark: SparkSession = GraftSession.harness(cpus = 4, logLevel = "ERROR")
+  lazy val spark: SparkSession = {
+    val warehouse = java.nio.file.Files.createTempDirectory("spark-warehouse").toFile
+    sys.addShutdownHook(sources.Staging.deleteRecursively(warehouse))
+    System.setProperty("spark.sql.warehouse.dir", warehouse.getPath)
+    GraftSession.harness(cpus = 4, logLevel = "ERROR")
+  }
   val sf: String = "/root/testdata/sf0.001"
 }
 

@@ -19,7 +19,7 @@ class StreamingSpec extends SparkSpec {
   test("stream-stream interval join equals the batch formulation") {
     val streamed = EventStream.runOnBatch(spark, sf,
       df => EventStream.clickPurchaseJoin(df),
-      s"ssjoin_${System.nanoTime()}")
+      "ssjoin")
       .collect()
       .map(r => (r.getAs[Long]("purchase_id"), r.getAs[Long]("click_id"))).toSet
     val ev = Tables.events(spark, sf)
@@ -61,7 +61,7 @@ class StreamingSpec extends SparkSpec {
   test("stateful flatMapGroupsWithState accumulates correct per-user totals") {
     val out = EventStream.runOnBatch(spark, sf,
       df => EventStream.statefulUserStats(df).toDF(),
-      s"stateful_${System.nanoTime()}")
+      "stateful")
     // last emitted row per user = final running total = batch groupBy result
     val finalRows = out.groupBy("user_id")
       .agg(max("n_events").as("n_events"))
@@ -343,5 +343,26 @@ class StreamingSpec extends SparkSpec {
           s"[$backend] KMV state diverged across the mid-batch crash replay")
       } finally spark.conf.set("spark.graft.stateStore", "hdfs")
     }
+  }
+
+  test("a replay that fails inside a micro-batch surfaces the failure and leaves nothing behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def trees = tmp.listFiles().map(_.getName).filter(_.startsWith("graft_")).toSet
+    // stage the input fixture first: only the failing replay's own trees count
+    EventStream.runOnBatch(spark, sf, identity, "replay_ok").count()
+    val key = "spark.sql.shuffle.partitions"
+    val partitions = spark.conf.get(key)
+    val before = trees
+    val e = intercept[Exception] {
+      EventStream.runOnBatch(spark, sf,
+        _.select(raise_error(lit("planted replay failure"))), "replay_fail")
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("planted replay failure")),
+      s"the build's failure did not surface: $e")
+    assert(spark.streams.active.isEmpty, "a failed replay left its query running")
+    assert(spark.conf.get(key) == partitions, "shuffle partitions not restored")
+    val left = trees.diff(before)
+    assert(left.isEmpty, s"a failed replay left trees in java.io.tmpdir: $left")
   }
 }
